@@ -9,10 +9,16 @@ line: {"metric": ..., "value": total_sec, "unit": "sec",
 Protocol: one warm-up execution per query (JIT + file-index warm), then
 median of 3 timed runs. Queries materialize through the noop sink so
 timing covers full execution without driver-side collect overhead.
+
+The bench reports and never gates: whether a change made the program
+slower is judged by perfbench (BENCHMARK.json, perfbench/README.md),
+which runs the parent and the change paired on the same machine.
 """
 
 from __future__ import annotations
 
+import hashlib
+import inspect
 import json
 import os
 import shutil
@@ -114,7 +120,7 @@ def time_ingest(spark, sf_dir: str) -> tuple[float, int]:
 # sizes stay bounded. All-pairs behavior would show ~100x wall-clock at
 # 10x rows; the bucketed cascades should stay near ~10x (linear in
 # candidates). Results go to a separate "scaling" field — not part of the
-# headline total, so the anchor comparison stays like-for-like.
+# headline total, so the total stays comparable across rounds.
 SCALE_N1 = 2_000
 SCALE_FACTOR = 10
 SCALE_DEDUP_TABLES = 12
@@ -331,30 +337,37 @@ def _synth_documents(spark, n: int, out_dir: str) -> None:
 
 # The 1x/10x probe corpora are DETERMINISTIC (fixed RandomState seeds),
 # so re-synthesizing them every bench run is pure untimed driver overhead
-# (4 parquet writes). They are cached per (generator version, n) under
-# /tmp and rebuilt only when absent. This caches probe INPUT, never any
-# query output or intermediate — results are computed from the parquet
-# every run, exactly as before. Bump the version when a generator's
-# logic or seeds change.
-_PROBE_CACHE_VER = 1
-_PROBE_CACHE_ROOT = os.path.join(
-    tempfile.gettempdir(), f"spark_graft_probe_cache_v{_PROBE_CACHE_VER}"
-)
+# (4 parquet writes). They are cached under /tmp in a directory keyed on
+# n and a hash of both generators' source, so editing a generator lands
+# in a fresh directory. This caches probe INPUT, never any query output
+# or intermediate — results are computed from the parquet every run.
+_PROBE_CACHE_ROOT = os.path.join(tempfile.gettempdir(), "spark_graft_probe_cache")
 
 
 def _probe_corpus_dir(spark, n: int) -> str:
     """Return a directory holding the deterministic n-row synthetic
-    embeddings+documents corpora, synthesizing on first use."""
-    d = os.path.join(_PROBE_CACHE_ROOT, f"n{n}")
-    marker = os.path.join(d, "_COMPLETE")
-    if os.path.exists(marker):
+    embeddings+documents corpora, synthesizing on first use. A build
+    goes into a private temp dir beside the cache and is renamed into
+    place, so an interrupted or concurrent build never leaves a partial
+    corpus under the final name."""
+    src = "".join(inspect.getsource(g) for g in (_synth_embeddings, _synth_documents))
+    tag = hashlib.sha256(f"{n}\0{src}".encode()).hexdigest()[:16]
+    d = os.path.join(_PROBE_CACHE_ROOT, f"n{n}-{tag}")
+    if os.path.isdir(d):
         return d
-    shutil.rmtree(d, ignore_errors=True)  # drop any partial build
-    os.makedirs(d, exist_ok=True)
-    _synth_embeddings(spark, n, d)
-    _synth_documents(spark, n, d)
-    with open(marker, "w") as f:
-        f.write("ok")
+    os.makedirs(_PROBE_CACHE_ROOT, exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix=f".n{n}-{tag}-", dir=_PROBE_CACHE_ROOT)
+    try:
+        _synth_embeddings(spark, n, tmp)
+        _synth_documents(spark, n, tmp)
+        try:
+            os.replace(tmp, d)
+        except OSError:
+            # a concurrent run renamed its (identical) build in first
+            if not os.path.isdir(d):
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     return d
 
 
@@ -397,391 +410,386 @@ def _time_scaling(spark) -> dict:
     # read the same parquet bytes whether freshly built or cached
     d1 = _probe_corpus_dir(spark, SCALE_N1)
     d10 = _probe_corpus_dir(spark, SCALE_N1 * SCALE_FACTOR)
-    try:
 
-        def runs(d):
-            return verbatim_runs(
-                spark.read.parquet(os.path.join(d, "documents.parquet"))
-            )
-
-        def lsh_sides(d):
-            ed = load_ed(d)
-            q = ed.where(F.col("vec_id") < 5).select(
-                F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
-            )
-            return ed, q
-
-        def lsh(d):
-            return lsh_topk(*lsh_sides(d))
-
-        def dedup(d, bits):
-            return embedding_near_dup_pairs(load_ed(d), scale_planes_for(bits))
-
-        def n_candidate_pairs(d, bits):
-            return scale_candidate_pairs(load_ed(d), bits)
-
-        for name, b1, b10 in (
-            ("q_sim_lsh_topk", lambda: lsh(d1), lambda: lsh(d10)),
-            ("q_dedup_substring", lambda: runs(d1), lambda: runs(d10)),
-        ):
-            t1, t10 = timed(b1), timed(b10)
-            out[name] = {
-                "n_1x": SCALE_N1,
-                "n_10x": SCALE_N1 * SCALE_FACTOR,
-                "sec_1x": t1,
-                "sec_10x": t10,
-                "ratio": round(t10 / t1, 2) if t1 else None,
-            }
-        # wall-clock-free invariant for the ANN wall (r9 ADVICE): the
-        # verified candidate set must grow sublinearly (bits ~log2(n)
-        # re-tuning bounds bucket size), whatever the box's cache state
-        lp1 = scale_lsh_candidate_pairs(*lsh_sides(d1))
-        lp10 = scale_lsh_candidate_pairs(*lsh_sides(d10))
-        out["q_sim_lsh_topk"].update(
-            candidate_pairs_1x=lp1,
-            candidate_pairs_10x=lp10,
-            ratio_pairs=round(lp10 / lp1, 2) if lp1 else None,
+    def runs(d):
+        return verbatim_runs(
+            spark.read.parquet(os.path.join(d, "documents.parquet"))
         )
 
-        # Flagship near-dedup scaling: the full MinHash+LSH+verify cascade
-        # on the same 1x/10x corpora, plus the candidate-pair count
-        # (Σ C(bucket,2) over (band, bucket) groups) — constant-size
-        # signatures mean candidates track true near-dup pairs (planted
-        # linearly: one per 10 docs), not corpus size squared.
-        def mh(d):
-            return minhash_near_dup_pairs(
-                spark.read.parquet(os.path.join(d, "documents.parquet"))
-            )
+    def lsh_sides(d):
+        ed = load_ed(d)
+        q = ed.where(F.col("vec_id") < 5).select(
+            F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
+        )
+        return ed, q
 
-        def mh_candidates(d):
-            return scale_minhash_candidate_pairs(
-                spark.read.parquet(os.path.join(d, "documents.parquet"))
-            )
+    def lsh(d):
+        return lsh_topk(*lsh_sides(d))
 
-        t1, t10 = timed(lambda: mh(d1)), timed(lambda: mh(d10))
-        mh_p1, mh_p10 = mh_candidates(d1), mh_candidates(d10)
-        out["q_dedup_minhash"] = {
+    def dedup(d, bits):
+        return embedding_near_dup_pairs(load_ed(d), scale_planes_for(bits))
+
+    def n_candidate_pairs(d, bits):
+        return scale_candidate_pairs(load_ed(d), bits)
+
+    for name, b1, b10 in (
+        ("q_sim_lsh_topk", lambda: lsh(d1), lambda: lsh(d10)),
+        ("q_dedup_substring", lambda: runs(d1), lambda: runs(d10)),
+    ):
+        t1, t10 = timed(b1), timed(b10)
+        out[name] = {
             "n_1x": SCALE_N1,
             "n_10x": SCALE_N1 * SCALE_FACTOR,
             "sec_1x": t1,
             "sec_10x": t10,
             "ratio": round(t10 / t1, 2) if t1 else None,
-            "candidate_pairs_1x": mh_p1,
-            "candidate_pairs_10x": mh_p10,
-            "ratio_pairs": round(mh_p10 / mh_p1, 2) if mh_p1 else None,
         }
+    # wall-clock-free invariant for the ANN wall (r9 ADVICE): the
+    # verified candidate set must grow sublinearly (bits ~log2(n)
+    # re-tuning bounds bucket size), whatever the box's cache state
+    lp1 = scale_lsh_candidate_pairs(*lsh_sides(d1))
+    lp10 = scale_lsh_candidate_pairs(*lsh_sides(d10))
+    out["q_sim_lsh_topk"].update(
+        candidate_pairs_1x=lp1,
+        candidate_pairs_10x=lp10,
+        ratio_pairs=round(lp10 / lp1, 2) if lp1 else None,
+    )
 
-        # OCC_CAP accounting (VERDICT r4 item 4): how many df-cap-surviving
-        # positions the within-doc occurrence budget drops, and the matched
-        # positions that actually reach the pair join — the pair-growth
-        # evidence behind the substring wall-clock ratio. The planted
-        # near-dups grow linearly with n (one pair per 10 docs), so matched
-        # positions should scale ~10x, not ~100x.
-        def occ_stats(d):
-            kp = kept_positions(
-                spark.read.parquet(os.path.join(d, "documents.parquet"))
-            )
-            row = kp.select(
-                F.sum((F.col("occ") > OCC_CAP).cast("long")).alias("dropped"),
-                F.sum((F.col("occ") <= OCC_CAP).cast("long")).alias("kept"),
-            ).first()
-            return int(row["dropped"] or 0), int(row["kept"] or 0)
-
-        drop1, kept1 = occ_stats(d1)
-        drop10, kept10 = occ_stats(d10)
-        out["q_dedup_substring"].update(
-            occ_cap_dropped_1x=drop1,
-            occ_cap_dropped_10x=drop10,
-            joinable_positions_1x=kept1,
-            joinable_positions_10x=kept10,
+    # Flagship near-dedup scaling: the full MinHash+LSH+verify cascade
+    # on the same 1x/10x corpora, plus the candidate-pair count
+    # (Σ C(bucket,2) over (band, bucket) groups) — constant-size
+    # signatures mean candidates track true near-dup pairs (planted
+    # linearly: one per 10 docs), not corpus size squared.
+    def mh(d):
+        return minhash_near_dup_pairs(
+            spark.read.parquet(os.path.join(d, "documents.parquet"))
         )
 
-        # Embedding near-dup: report BOTH 10x points (VERDICT r3 item 4) —
-        # same-config (bits=1x's, the true like-for-like scaling ratio) and
-        # re-tuned (bits grown ~log2(n), the production posture). The
-        # HEADLINE invariants here are the candidate-pair RATIOS (VERDICT
-        # r5 item 5): pair counts are deterministic and noise-free, where
-        # the wall-clock ratio on a shared box moved 1.83×→4.17× between
-        # rounds on identical code. Wall clocks stay recorded as context.
-        t1 = timed(lambda: dedup(d1, SCALE_DEDUP_BITS_1X))
-        t10_same = timed(lambda: dedup(d10, SCALE_DEDUP_BITS_1X))
-        t10_tuned = timed(lambda: dedup(d10, SCALE_DEDUP_BITS_10X))
-        p1 = n_candidate_pairs(d1, SCALE_DEDUP_BITS_1X)
-        p10_same = n_candidate_pairs(d10, SCALE_DEDUP_BITS_1X)
-        p10_tuned = n_candidate_pairs(d10, SCALE_DEDUP_BITS_10X)
-        out["q_dedup_embedding"] = {
-            "n_1x": SCALE_N1,
-            "n_10x": SCALE_N1 * SCALE_FACTOR,
-            "sec_1x": t1,
-            "sec_10x_same_config": t10_same,
-            "sec_10x_retuned": t10_tuned,
-            "bits_1x": SCALE_DEDUP_BITS_1X,
-            "bits_10x_retuned": SCALE_DEDUP_BITS_10X,
-            "candidate_pairs_1x": p1,
-            "candidate_pairs_10x_same_config": p10_same,
-            "candidate_pairs_10x_retuned": p10_tuned,
-            "ratio_pairs_same_config": round(p10_same / p1, 2) if p1 else None,
-            "ratio_pairs_retuned": round(p10_tuned / p1, 2) if p1 else None,
-            "ratio_wall_same_config": round(t10_same / t1, 2) if t1 else None,
-            "ratio_wall_retuned": round(t10_tuned / t1, 2) if t1 else None,
-        }
-
-        # Histogram-split scaling (r6): the stump's candidate-threshold
-        # count — distinct (feature, bin) pairs — is bounded by the bin
-        # GRID, not corpus size (the XGBoost/Spark-ML discipline its
-        # docstring claims). ratio_bins is the noise-free invariant: at
-        # 10x gaussian rows the grid only densifies toward the tails
-        # (sub-linear, ~1.x), where per-row candidate generation would
-        # show ~10x. Wall-clock tracks the linear corpus scan.
-        from kafka_hadoop_consumer_spark.queries.quality import (
-            _stump_points,
-            q_ml_decision_stump,
+    def mh_candidates(d):
+        return scale_minhash_candidate_pairs(
+            spark.read.parquet(os.path.join(d, "documents.parquet"))
         )
 
-        def stump_bins(d):
-            return (
-                _stump_points(spark, d).select("feat", "bin").distinct().count()
-            )
+    t1, t10 = timed(lambda: mh(d1)), timed(lambda: mh(d10))
+    mh_p1, mh_p10 = mh_candidates(d1), mh_candidates(d10)
+    out["q_dedup_minhash"] = {
+        "n_1x": SCALE_N1,
+        "n_10x": SCALE_N1 * SCALE_FACTOR,
+        "sec_1x": t1,
+        "sec_10x": t10,
+        "ratio": round(t10 / t1, 2) if t1 else None,
+        "candidate_pairs_1x": mh_p1,
+        "candidate_pairs_10x": mh_p10,
+        "ratio_pairs": round(mh_p10 / mh_p1, 2) if mh_p1 else None,
+    }
 
-        t1 = timed(lambda: q_ml_decision_stump(spark, d1))
-        t10 = timed(lambda: q_ml_decision_stump(spark, d10))
-        b1x, b10x = stump_bins(d1), stump_bins(d10)
-        out["q_ml_decision_stump"] = {
-            "n_1x": SCALE_N1,
-            "n_10x": SCALE_N1 * SCALE_FACTOR,
-            "sec_1x": t1,
-            "sec_10x": t10,
-            "ratio": round(t10 / t1, 2) if t1 else None,
-            "bins_1x": b1x,
-            "bins_10x": b10x,
-            "ratio_bins": round(b10x / b1x, 2) if b1x else None,
-        }
+    # OCC_CAP accounting (VERDICT r4 item 4): how many df-cap-surviving
+    # positions the within-doc occurrence budget drops, and the matched
+    # positions that actually reach the pair join — the pair-growth
+    # evidence behind the substring wall-clock ratio. The planted
+    # near-dups grow linearly with n (one pair per 10 docs), so matched
+    # positions should scale ~10x, not ~100x.
+    def occ_stats(d):
+        kp = kept_positions(
+            spark.read.parquet(os.path.join(d, "documents.parquet"))
+        )
+        row = kp.select(
+            F.sum((F.col("occ") > OCC_CAP).cast("long")).alias("dropped"),
+            F.sum((F.col("occ") <= OCC_CAP).cast("long")).alias("kept"),
+        ).first()
+        return int(row["dropped"] or 0), int(row["kept"] or 0)
 
-        # CC round-scaling (r6 verdict item 5): the large-star/small-star
-        # loop on a PATH graph — maximum diameter per node count, the
-        # adversarial case where diameter-round CC (q_dedup_clusters'
-        # shape) needs n rounds but log-round CC must stay ~log2(V). The
-        # invariant is ROUNDS-TO-FIXPOINT (deterministic, noise-free);
-        # wall-clock from a single run is context only, so no
-        # warm-up/median here — rounds don't jitter.
-        from kafka_hadoop_consumer_spark.queries.graph import (
-            CC_LAST_EDGE_COUNTS,
-            CC_LAST_ROUNDS,
-            cc_from_edges,
+    drop1, kept1 = occ_stats(d1)
+    drop10, kept10 = occ_stats(d10)
+    out["q_dedup_substring"].update(
+        occ_cap_dropped_1x=drop1,
+        occ_cap_dropped_10x=drop10,
+        joinable_positions_1x=kept1,
+        joinable_positions_10x=kept10,
+    )
+
+    # Embedding near-dup: report BOTH 10x points (VERDICT r3 item 4) —
+    # same-config (bits=1x's, the true like-for-like scaling ratio) and
+    # re-tuned (bits grown ~log2(n), the production posture). The
+    # HEADLINE invariants here are the candidate-pair RATIOS (VERDICT
+    # r5 item 5): pair counts are deterministic and noise-free, where
+    # the wall-clock ratio on a shared box moved 1.83×→4.17× between
+    # rounds on identical code. Wall clocks stay recorded as context.
+    t1 = timed(lambda: dedup(d1, SCALE_DEDUP_BITS_1X))
+    t10_same = timed(lambda: dedup(d10, SCALE_DEDUP_BITS_1X))
+    t10_tuned = timed(lambda: dedup(d10, SCALE_DEDUP_BITS_10X))
+    p1 = n_candidate_pairs(d1, SCALE_DEDUP_BITS_1X)
+    p10_same = n_candidate_pairs(d10, SCALE_DEDUP_BITS_1X)
+    p10_tuned = n_candidate_pairs(d10, SCALE_DEDUP_BITS_10X)
+    out["q_dedup_embedding"] = {
+        "n_1x": SCALE_N1,
+        "n_10x": SCALE_N1 * SCALE_FACTOR,
+        "sec_1x": t1,
+        "sec_10x_same_config": t10_same,
+        "sec_10x_retuned": t10_tuned,
+        "bits_1x": SCALE_DEDUP_BITS_1X,
+        "bits_10x_retuned": SCALE_DEDUP_BITS_10X,
+        "candidate_pairs_1x": p1,
+        "candidate_pairs_10x_same_config": p10_same,
+        "candidate_pairs_10x_retuned": p10_tuned,
+        "ratio_pairs_same_config": round(p10_same / p1, 2) if p1 else None,
+        "ratio_pairs_retuned": round(p10_tuned / p1, 2) if p1 else None,
+        "ratio_wall_same_config": round(t10_same / t1, 2) if t1 else None,
+        "ratio_wall_retuned": round(t10_tuned / t1, 2) if t1 else None,
+    }
+
+    # Histogram-split scaling (r6): the stump's candidate-threshold
+    # count — distinct (feature, bin) pairs — is bounded by the bin
+    # GRID, not corpus size (the XGBoost/Spark-ML discipline its
+    # docstring claims). ratio_bins is the noise-free invariant: at
+    # 10x gaussian rows the grid only densifies toward the tails
+    # (sub-linear, ~1.x), where per-row candidate generation would
+    # show ~10x. Wall-clock tracks the linear corpus scan.
+    from kafka_hadoop_consumer_spark.queries.quality import (
+        _stump_points,
+        q_ml_decision_stump,
+    )
+
+    def stump_bins(d):
+        return (
+            _stump_points(spark, d).select("feat", "bin").distinct().count()
         )
 
-        def cc_run(n: int, key: str) -> float:
-            edges = spark.range(1, n).select(
-                (F.col("id") - 1).alias("u"), F.col("id").alias("v")
-            )
-            t0 = time.perf_counter()
-            materialize(cc_from_edges(edges, key=key, max_rounds=40))
-            wall = round(time.perf_counter() - t0, 3)
-            release_tracked()
-            return wall
+    t1 = timed(lambda: q_ml_decision_stump(spark, d1))
+    t10 = timed(lambda: q_ml_decision_stump(spark, d10))
+    b1x, b10x = stump_bins(d1), stump_bins(d10)
+    out["q_ml_decision_stump"] = {
+        "n_1x": SCALE_N1,
+        "n_10x": SCALE_N1 * SCALE_FACTOR,
+        "sec_1x": t1,
+        "sec_10x": t10,
+        "ratio": round(t10 / t1, 2) if t1 else None,
+        "bins_1x": b1x,
+        "bins_10x": b10x,
+        "ratio_bins": round(b10x / b1x, 2) if b1x else None,
+    }
 
-        # Hybrid-search scaling (r7 verdict item: it joined the headline
-        # set without the scale evidence every other promoted key
-        # carries). Same hybrid_search core as q_e2e_hybrid_search, with
-        # vocabulary-matched query terms over the synthetic corpora. Two
-        # invariants: wall ratio ~linear (every stage is one corpus scan
-        # + per-query windows over <=POOL rows), and the PRUNED token
-        # stream — the rows that actually reach the BM25 explode-output
-        # shuffle — stays the query-term fraction of the corpus (6 of 40
-        # vocab words), evidencing "the IN-filter prunes BEFORE the
-        # shuffle" with row counts, not prose.
-        from kafka_hadoop_consumer_spark.queries.similarity import (
-            hybrid_search,
+    # CC round-scaling (r6 verdict item 5): the large-star/small-star
+    # loop on a PATH graph — maximum diameter per node count, the
+    # adversarial case where diameter-round CC (q_dedup_clusters'
+    # shape) needs n rounds but log-round CC must stay ~log2(V). The
+    # invariant is ROUNDS-TO-FIXPOINT (deterministic, noise-free);
+    # wall-clock from a single run is context only, so no
+    # warm-up/median here — rounds don't jitter.
+    from kafka_hadoop_consumer_spark.queries.graph import (
+        CC_LAST_EDGE_COUNTS,
+        CC_LAST_ROUNDS,
+        cc_from_edges,
+    )
+
+    def cc_run(n: int, key: str) -> float:
+        edges = spark.range(1, n).select(
+            (F.col("id") - 1).alias("u"), F.col("id").alias("v")
+        )
+        t0 = time.perf_counter()
+        materialize(cc_from_edges(edges, key=key, max_rounds=40))
+        wall = round(time.perf_counter() - t0, 3)
+        release_tracked()
+        return wall
+
+    # Hybrid-search scaling (r7 verdict item: it joined the headline
+    # set without the scale evidence every other promoted key
+    # carries). Same hybrid_search core as q_e2e_hybrid_search, with
+    # vocabulary-matched query terms over the synthetic corpora. Two
+    # invariants: wall ratio ~linear (every stage is one corpus scan
+    # + per-query windows over <=POOL rows), and the PRUNED token
+    # stream — the rows that actually reach the BM25 explode-output
+    # shuffle — stays the query-term fraction of the corpus (6 of 40
+    # vocab words), evidencing "the IN-filter prunes BEFORE the
+    # shuffle" with row counts, not prose.
+    from kafka_hadoop_consumer_spark.queries.similarity import (
+        hybrid_search,
+    )
+
+    hyb_queries = {
+        "hq1": ("w1", "w2"),
+        "hq2": ("w3", "w4"),
+        "hq3": ("w5", "w6"),
+    }
+    hyb_terms = [t for ts in hyb_queries.values() for t in ts]
+
+    def load_docs(d):
+        # synth docs lack the metadata cols the hydration projects
+        return (
+            spark.read.parquet(os.path.join(d, "documents.parquet"))
+            .withColumn("lang", F.lit("en"))
+            .withColumn("source", F.lit("synth"))
         )
 
-        hyb_queries = {
-            "hq1": ("w1", "w2"),
-            "hq2": ("w3", "w4"),
-            "hq3": ("w5", "w6"),
-        }
-        hyb_terms = [t for ts in hyb_queries.values() for t in ts]
+    def hyb(d):
+        return hybrid_search(spark, load_docs(d), spark.read.parquet(
+            os.path.join(d, "embeddings.parquet")), hyb_queries)
 
-        def load_docs(d):
-            # synth docs lack the metadata cols the hydration projects
-            return (
-                spark.read.parquet(os.path.join(d, "documents.parquet"))
-                .withColumn("lang", F.lit("en"))
-                .withColumn("source", F.lit("synth"))
+    def token_counts(d):
+        """(total exploded tokens, tokens surviving the term
+        IN-filter) — the second number is the BM25 stage's shuffle
+        input row count."""
+        row = (
+            load_docs(d)
+            .select(F.explode(F.split("text", " ")).alias("term"))
+            .agg(
+                F.count(F.lit(1)).alias("total"),
+                F.count(
+                    F.when(F.col("term").isin(*hyb_terms), 1)
+                ).alias("pruned"),
             )
-
-        def hyb(d):
-            return hybrid_search(spark, load_docs(d), spark.read.parquet(
-                os.path.join(d, "embeddings.parquet")), hyb_queries)
-
-        def token_counts(d):
-            """(total exploded tokens, tokens surviving the term
-            IN-filter) — the second number is the BM25 stage's shuffle
-            input row count."""
-            row = (
-                load_docs(d)
-                .select(F.explode(F.split("text", " ")).alias("term"))
-                .agg(
-                    F.count(F.lit(1)).alias("total"),
-                    F.count(
-                        F.when(F.col("term").isin(*hyb_terms), 1)
-                    ).alias("pruned"),
-                )
-                .first()
-            )
-            return int(row["total"]), int(row["pruned"])
-
-        hy_t1, hy_t10 = timed(lambda: hyb(d1)), timed(lambda: hyb(d10))
-        tot1, pr1 = token_counts(d1)
-        tot10, pr10 = token_counts(d10)
-        out["q_e2e_hybrid_search"] = {
-            "n_1x": SCALE_N1,
-            "n_10x": SCALE_N1 * SCALE_FACTOR,
-            "sec_1x": hy_t1,
-            "sec_10x": hy_t10,
-            "ratio": round(hy_t10 / hy_t1, 2) if hy_t1 else None,
-            "tokens_total_1x": tot1,
-            "tokens_after_in_filter_1x": pr1,
-            "tokens_total_10x": tot10,
-            "tokens_after_in_filter_10x": pr10,
-            "ratio_pruned_tokens": round(pr10 / pr1, 2) if pr1 else None,
-            "prune_fraction_10x": round(pr10 / tot10, 3) if tot10 else None,
-        }
-
-        # Triangle scaling (r8): the most expensive bench extra gets the
-        # same receipts as the promoted keys. Graph = k disjoint 8-node
-        # cliques (k scales 10x) PLUS a disjoint star whose hub has
-        # n/2 leaves — the adversarial hub that makes unoriented wedge
-        # enumeration quadratic. Invariants (noise-free row counts):
-        # enumerated wedges track triangles EXACTLY (every clique wedge
-        # closes, the hub emits zero because orientation gives its
-        # leaves out-degree 1 and the hub out-degree 0), so
-        # ratio_wedges == 10 at 10x nodes while the unoriented
-        # per-center probe count Σ C(deg,2) — also measured — grows
-        # ~100x, dominated by C(n/2, 2) at the hub. Wall-clock is
-        # context; the counts are the claim.
-        from kafka_hadoop_consumer_spark.queries.graph import (
-            triangles_from_edges,
+            .first()
         )
+        return int(row["total"]), int(row["pruned"])
 
-        CLIQUE = 8
-        clique_pairs = F.array(*[
-            F.struct(F.lit(i).alias("i"), F.lit(j).alias("j"))
-            for i in range(CLIQUE) for j in range(i + 1, CLIQUE)
-        ])
+    hy_t1, hy_t10 = timed(lambda: hyb(d1)), timed(lambda: hyb(d10))
+    tot1, pr1 = token_counts(d1)
+    tot10, pr10 = token_counts(d10)
+    out["q_e2e_hybrid_search"] = {
+        "n_1x": SCALE_N1,
+        "n_10x": SCALE_N1 * SCALE_FACTOR,
+        "sec_1x": hy_t1,
+        "sec_10x": hy_t10,
+        "ratio": round(hy_t10 / hy_t1, 2) if hy_t1 else None,
+        "tokens_total_1x": tot1,
+        "tokens_after_in_filter_1x": pr1,
+        "tokens_total_10x": tot10,
+        "tokens_after_in_filter_10x": pr10,
+        "ratio_pruned_tokens": round(pr10 / pr1, 2) if pr1 else None,
+        "prune_fraction_10x": round(pr10 / tot10, 3) if tot10 else None,
+    }
 
-        def tri_edges(n_nodes: int):
-            g = spark.range(n_nodes // CLIQUE).select(
-                (F.col("id") * CLIQUE).alias("base"),
-                F.explode(clique_pairs).alias("p"),
-            )
-            cliques = g.select(
-                (F.col("base") + F.col("p.i")).alias("u"),
-                (F.col("base") + F.col("p.j")).alias("v"),
-            )
-            hub = F.lit(10 * n_nodes)  # id above every leaf -> u < v holds
-            star = spark.range(n_nodes, n_nodes + n_nodes // 2).select(
-                F.col("id").alias("u"), hub.alias("v")
-            )
-            return cliques.unionAll(star)
+    # Triangle scaling (r8): the most expensive bench extra gets the
+    # same receipts as the promoted keys. Graph = k disjoint 8-node
+    # cliques (k scales 10x) PLUS a disjoint star whose hub has
+    # n/2 leaves — the adversarial hub that makes unoriented wedge
+    # enumeration quadratic. Invariants (noise-free row counts):
+    # enumerated wedges track triangles EXACTLY (every clique wedge
+    # closes, the hub emits zero because orientation gives its
+    # leaves out-degree 1 and the hub out-degree 0), so
+    # ratio_wedges == 10 at 10x nodes while the unoriented
+    # per-center probe count Σ C(deg,2) — also measured — grows
+    # ~100x, dominated by C(n/2, 2) at the hub. Wall-clock is
+    # context; the counts are the claim.
+    from kafka_hadoop_consumer_spark.queries.graph import (
+        triangles_from_edges,
+    )
 
-        def tri_run(n_nodes: int):
-            tri, deg, wedges = triangles_from_edges(tri_edges(n_nodes))
-            t0 = time.perf_counter()
-            n_tri = tri.count()
-            wall = round(time.perf_counter() - t0, 3)
-            unoriented = deg.agg(
-                F.sum(F.expr("d * (d - 1) / 2")).cast("long")
-            ).first()[0]
-            n_wedges = wedges.count()
-            release_tracked()
-            return wall, n_tri, n_wedges, int(unoriented)
+    CLIQUE = 8
+    clique_pairs = F.array(*[
+        F.struct(F.lit(i).alias("i"), F.lit(j).alias("j"))
+        for i in range(CLIQUE) for j in range(i + 1, CLIQUE)
+    ])
 
-        tw1, tc1, wc1, un1 = tri_run(SCALE_N1)
-        tw10, tc10, wc10, un10 = tri_run(SCALE_N1 * SCALE_FACTOR)
-        out["q_graph_triangles"] = {
-            "graph": f"disjoint {CLIQUE}-cliques + (n/2)-leaf hub star",
-            "n_1x": SCALE_N1,
-            "n_10x": SCALE_N1 * SCALE_FACTOR,
-            "sec_1x": tw1,
-            "sec_10x": tw10,
-            "triangles_1x": tc1,
-            "triangles_10x": tc10,
-            "wedges_1x": wc1,
-            "wedges_10x": wc10,
-            "unoriented_probes_1x": un1,
-            "unoriented_probes_10x": un10,
-            "ratio_wedges": round(wc10 / wc1, 2) if wc1 else None,
-            "ratio_unoriented_probes": round(un10 / un1, 2) if un1 else None,
-        }
-
-        cc_t1 = cc_run(SCALE_N1, "bench_cc_1x")
-        cc_t10 = cc_run(SCALE_N1 * SCALE_FACTOR, "bench_cc_10x")
-        r1x, r10x = CC_LAST_ROUNDS["bench_cc_1x"], CC_LAST_ROUNDS["bench_cc_10x"]
-        out["q_graph_cc"] = {
-            "graph": "path (diameter = n-1)",
-            "n_1x": SCALE_N1,
-            "n_10x": SCALE_N1 * SCALE_FACTOR,
-            "sec_1x": cc_t1,
-            "sec_10x": cc_t10,
-            "rounds_1x": r1x,
-            "rounds_10x": r10x,
-            "ratio_rounds": round(r10x / r1x, 2) if r1x else None,
-            "edge_counts_per_round_10x": CC_LAST_EDGE_COUNTS["bench_cc_10x"],
-        }
-
-        # Min-label round-scaling (r8 verdict item 5): q_dedup_clusters'
-        # diameter-round CC previously capped at 16 rounds on an
-        # ASSERTED "near-dup components are shallow" claim. This probe
-        # makes the cap data: planted near-dup chains (doc i ~ doc i+1
-        # only → one component, diameter = n-1) at two depths, recording
-        # rounds-to-fixpoint — the invariant is rounds == diameter + 1
-        # confirm round, so the old cap silently mislabeled any chain
-        # deeper than 16 (the operator now raises past its cap instead).
-        from kafka_hadoop_consumer_spark.queries.dedup import (
-            MINLABEL_LAST_ROUNDS,
-            min_label_components,
+    def tri_edges(n_nodes: int):
+        g = spark.range(n_nodes // CLIQUE).select(
+            (F.col("id") * CLIQUE).alias("base"),
+            F.explode(clique_pairs).alias("p"),
         )
+        cliques = g.select(
+            (F.col("base") + F.col("p.i")).alias("u"),
+            (F.col("base") + F.col("p.j")).alias("v"),
+        )
+        hub = F.lit(10 * n_nodes)  # id above every leaf -> u < v holds
+        star = spark.range(n_nodes, n_nodes + n_nodes // 2).select(
+            F.col("id").alias("u"), hub.alias("v")
+        )
+        return cliques.unionAll(star)
 
-        def chain_rounds(diam: int) -> float:
-            e = spark.range(diam).select(
-                F.col("id").alias("doc1"), (F.col("id") + 1).alias("doc2")
-            )
-            e = e.union(e.select(
-                F.col("doc2").alias("doc1"), F.col("doc1").alias("doc2")
-            ))
-            t0 = time.perf_counter()
-            labels = min_label_components(e, key=f"bench_chain_{diam}")
-            # per-round localCheckpoints make the fixpoint loop eager, so
-            # the operator's work is done here; the invariant scan below
-            # stays OUTSIDE the window (cc_run/tri_run convention)
-            wall = round(time.perf_counter() - t0, 3)
-            not_min = labels.where(F.col("label") != 0).count()
-            release_tracked()
-            assert not_min == 0, (
-                f"chain diam={diam}: {not_min} nodes never reached the "
-                "component min — propagation broke"
-            )
-            return wall
+    def tri_run(n_nodes: int):
+        tri, deg, wedges = triangles_from_edges(tri_edges(n_nodes))
+        t0 = time.perf_counter()
+        n_tri = tri.count()
+        wall = round(time.perf_counter() - t0, 3)
+        unoriented = deg.agg(
+            F.sum(F.expr("d * (d - 1) / 2")).cast("long")
+        ).first()[0]
+        n_wedges = wedges.count()
+        release_tracked()
+        return wall, n_tri, n_wedges, int(unoriented)
 
-        DIAM_A, DIAM_B = 5, 20
-        ml_ta, ml_tb = chain_rounds(DIAM_A), chain_rounds(DIAM_B)
-        ml_ra = MINLABEL_LAST_ROUNDS[f"bench_chain_{DIAM_A}"]
-        ml_rb = MINLABEL_LAST_ROUNDS[f"bench_chain_{DIAM_B}"]
-        out["q_dedup_clusters"] = {
-            "graph": "planted near-dup chain (diameter = n-1)",
-            "diam_a": DIAM_A,
-            "rounds_a": ml_ra,
-            "sec_a": ml_ta,
-            "diam_b": DIAM_B,
-            "rounds_b": ml_rb,
-            "sec_b": ml_tb,
-            # rounds = diameter + 1 confirm -> 21/6 = 3.5 at 4x depth
-            "ratio_rounds": round(ml_rb / ml_ra, 2) if ml_ra else None,
-        }
-    finally:
-        # the corpora are a persistent deterministic cache now (probe
-        # INPUT only) — deliberately NOT deleted; see _probe_corpus_dir
-        pass
+    tw1, tc1, wc1, un1 = tri_run(SCALE_N1)
+    tw10, tc10, wc10, un10 = tri_run(SCALE_N1 * SCALE_FACTOR)
+    out["q_graph_triangles"] = {
+        "graph": f"disjoint {CLIQUE}-cliques + (n/2)-leaf hub star",
+        "n_1x": SCALE_N1,
+        "n_10x": SCALE_N1 * SCALE_FACTOR,
+        "sec_1x": tw1,
+        "sec_10x": tw10,
+        "triangles_1x": tc1,
+        "triangles_10x": tc10,
+        "wedges_1x": wc1,
+        "wedges_10x": wc10,
+        "unoriented_probes_1x": un1,
+        "unoriented_probes_10x": un10,
+        "ratio_wedges": round(wc10 / wc1, 2) if wc1 else None,
+        "ratio_unoriented_probes": round(un10 / un1, 2) if un1 else None,
+    }
+
+    cc_t1 = cc_run(SCALE_N1, "bench_cc_1x")
+    cc_t10 = cc_run(SCALE_N1 * SCALE_FACTOR, "bench_cc_10x")
+    r1x, r10x = CC_LAST_ROUNDS["bench_cc_1x"], CC_LAST_ROUNDS["bench_cc_10x"]
+    out["q_graph_cc"] = {
+        "graph": "path (diameter = n-1)",
+        "n_1x": SCALE_N1,
+        "n_10x": SCALE_N1 * SCALE_FACTOR,
+        "sec_1x": cc_t1,
+        "sec_10x": cc_t10,
+        "rounds_1x": r1x,
+        "rounds_10x": r10x,
+        "ratio_rounds": round(r10x / r1x, 2) if r1x else None,
+        "edge_counts_per_round_10x": CC_LAST_EDGE_COUNTS["bench_cc_10x"],
+    }
+
+    # Min-label round-scaling (r8 verdict item 5): q_dedup_clusters'
+    # diameter-round CC previously capped at 16 rounds on an
+    # ASSERTED "near-dup components are shallow" claim. This probe
+    # makes the cap data: planted near-dup chains (doc i ~ doc i+1
+    # only → one component, diameter = n-1) at two depths, recording
+    # rounds-to-fixpoint — the invariant is rounds == diameter + 1
+    # confirm round, so the old cap silently mislabeled any chain
+    # deeper than 16 (the operator now raises past its cap instead).
+    from kafka_hadoop_consumer_spark.queries.dedup import (
+        MINLABEL_LAST_ROUNDS,
+        min_label_components,
+    )
+
+    def chain_rounds(diam: int) -> float:
+        e = spark.range(diam).select(
+            F.col("id").alias("doc1"), (F.col("id") + 1).alias("doc2")
+        )
+        e = e.union(e.select(
+            F.col("doc2").alias("doc1"), F.col("doc1").alias("doc2")
+        ))
+        t0 = time.perf_counter()
+        labels = min_label_components(e, key=f"bench_chain_{diam}")
+        # per-round localCheckpoints make the fixpoint loop eager, so
+        # the operator's work is done here; the invariant scan below
+        # stays OUTSIDE the window (cc_run/tri_run convention)
+        wall = round(time.perf_counter() - t0, 3)
+        not_min = labels.where(F.col("label") != 0).count()
+        release_tracked()
+        assert not_min == 0, (
+            f"chain diam={diam}: {not_min} nodes never reached the "
+            "component min — propagation broke"
+        )
+        return wall
+
+    DIAM_A, DIAM_B = 5, 20
+    ml_ta, ml_tb = chain_rounds(DIAM_A), chain_rounds(DIAM_B)
+    ml_ra = MINLABEL_LAST_ROUNDS[f"bench_chain_{DIAM_A}"]
+    ml_rb = MINLABEL_LAST_ROUNDS[f"bench_chain_{DIAM_B}"]
+    out["q_dedup_clusters"] = {
+        "graph": "planted near-dup chain (diameter = n-1)",
+        "diam_a": DIAM_A,
+        "rounds_a": ml_ra,
+        "sec_a": ml_ta,
+        "diam_b": DIAM_B,
+        "rounds_b": ml_rb,
+        "sec_b": ml_tb,
+        # rounds = diameter + 1 confirm -> 21/6 = 3.5 at 4x depth
+        "ratio_rounds": round(ml_rb / ml_ra, 2) if ml_ra else None,
+    }
     return out
 
 
@@ -1016,12 +1024,11 @@ def main() -> None:
     timings["s_ingest_e2e"] = round(ingest_sec, 3)
 
     # Later-round additions, timed OUTSIDE the headline total so the
-    # BASELINE.md anchor comparison stays like-for-like (same policy as
+    # total stays comparable across rounds (same policy as
     # scaling_10x/skew_join): the MG heavy-hitter plan, the near-dup-graph
     # PageRank, PQ ANN, the Poisson bootstrap, and the dedup/text/graph
     # extras. (q_graph_cc and q_e2e_hybrid_search were timed here through
-    # r6; they are HEADLINE entries from r7 on — BASELINE.md records the
-    # anchor arithmetic.)
+    # r6; they are HEADLINE entries from r7 on.)
     extras = {
         name: time_query(spark, name, sf_dir)
         for name in ("q_text_heavy_hitters", "q_graph_pagerank",
@@ -1039,12 +1046,10 @@ def main() -> None:
     # variance source on the shared 32-core box (BASELINE.md variance
     # protocol: same code moved the total ~1.5x boot-to-boot); two samples
     # an entire bench apart let the reader separate contention from real
-    # regressions IN the recorded file, and the advisory gate below takes
-    # the per-query min of the two passes as its point estimate.
+    # regressions IN the recorded file.
     control = {name: time_query(spark, name, sf_dir) for name in HEADLINE}
     control["s_ingest_e2e"] = timings["s_ingest_e2e"]  # FS-bound; not re-run
 
-    best = {k: min(v, control.get(k, v)) for k, v in timings.items()}
     detail = {
         "metric": "headline query wall-clock (median of 3, noop sink)",
         "value": round(sum(timings.values()), 3),
@@ -1058,7 +1063,6 @@ def main() -> None:
         "r3_ops": extras,
         "scaling_10x": scaling,
         "skew_join": skew,
-        "advisory_gate": warmed_advisory(best, box=session_box_factor(best, sf)),
         "sf": float(sf),
     }
     # One-time 100x ANN stress receipt (r8 verdict item 8): recorded by
@@ -1082,7 +1086,6 @@ def main() -> None:
     with open(detail_path, "w") as f:
         json.dump(detail, f, indent=2)
     print(json.dumps(detail), file=sys.stderr)
-    check_regressions(best, sf)
     print(format_final_line(detail), flush=True)
 
 
@@ -1144,340 +1147,6 @@ def format_final_line(detail: dict) -> str:
         }
         line = json.dumps(minimal, separators=(",", ":"))
     return line
-
-
-# Regression guardrail: refactors must not silently slow the headline
-# set. Compared only at the anchor's scale factor (per-query medians are
-# meaningless across SFs). Thresholds are noise-calibrated: ambient VM
-# load moves single queries up to ~1.5× run-to-run, so the trip wires
-# are any query >2× OR total >1.4× — a real regression (e.g. the cache
-# policy bug: one query 4×, total 1.75×) trips both, noise trips
-# neither. Per-query ratios always print to stderr for inspection.
-ANCHOR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_r01.json")
-QUERY_RATIO = 2.0
-TOTAL_RATIO = 1.4
-
-# Isolated WARMED anchors for the keys whose honest baseline moved
-# after r01 (fast-boot r1 numbers, warm-up sensitivity, or a documented
-# post-r01 re-anchor like the minhash md5+affine portability cost).
-# Reading driver min-of-passes against the stale r01 numbers at the
-# judge's 1.3x advisory convention flapped on noise (q_text_ngram:
-# 1.28x vs 1.31x across two rounds with identical code), and at the
-# hard 2x convention produced the r11 false alarms (minhash 2.00x,
-# ngram_jaccard 2.47x in run A). BOTH gates below read THESE
-# same-protocol isolated warmed medians for the keys listed here —
-# measurement provenance in BASELINE.md ("warmed-anchor gate"); the
-# protocol itself is tools/warmed_probe.py:
-#   q_udf_scalar / q_text_ngram — r9 isolated warmed protocol (four
-#     headline-style queries warm the JVM+Python workers, then
-#     time_query);
-#   q_win_sessionize — r11, same protocol, post helper-profile fix
-#     (min of two sessions whose co-measured controls sat inside the
-#     r9 bands);
-#   s_ingest_e2e — top of the r10 honest warmed band 0.62-0.83 s
-#     (post streaming-engine-warm-up profile); confirmed r12 with
-#     three warmed_probe readings 0.548/0.581/0.802 s on boxes
-#     1.17/1.38/1.48x — attainable even under contention;
-#   q_dedup_minhash — r5 isolated post-md5+affine anchor 1.27 s,
-#     corroborated r12 (warmed_probe 1.48 s on a co-measured 1.17x
-#     box = 1.27 normalized);
-#   q_dedup_ngram_jaccard — r12 warmed_probe min-of-three-sessions
-#     1.143 s (box 1.17x; raw min recorded, not box-derived);
-#   q_graph_cc — anchor 3.9 s, re-grounded r13 on MEASURED in-bench
-#     raw minima (r12 committed bench: 3.920 s raw at session box
-#     1.35x, 1.01x vs anchor), retiring the r12 box-division estimate
-#     the ADVICE flagged. warmed_probe raw-min for cc is 4.631 s
-#     (three r13 sessions, boxes 1.29-2.14) — the probe's 4-query
-#     warm-up systematically under-warms a 19-round iterative job, so
-#     its readings sit ABOVE mid-bench context and would loosen the
-#     gate; in-bench minima are the comparable protocol for this key.
-#   q_join_multiway / q_join_range / q_win_topk_group — r13
-#     warmed_probe raw min of three sessions (boxes 1.40/1.29/2.14;
-#     multiway 0.836/0.933/1.001, range 0.444/0.446, topk
-#     0.522/0.523 — the last two contention-INsensitive, byte-stable
-#     across a 1.7x box swing). Raw min on contended boxes upper-
-#     bounds the idle value, so these anchors are conservative-loose,
-#     never false-alarm-tight. q_agg_groupby was probed identically
-#     (0.484 stable at boxes 1.29 AND 2.14, below its 0.53 r01
-#     anchor — the r12 1.78x raw read was first-position JIT/codegen
-#     cold-start, not code) but carries NO warmed anchor: its
-#     in-bench first-position reading runs ~1.9x its deep-warm probe
-#     value, so a probe-derived anchor would false-flag every honest
-#     session; the r01 hard-gate anchor already covers it.
-WARMED_ANCHORS = {
-    "q_udf_scalar": 0.302,
-    "q_text_ngram": 0.746,
-    "q_win_sessionize": 0.55,
-    "s_ingest_e2e": 0.83,
-    # r14 re-anchors (verdict item 8): min of THREE isolated
-    # tools/warmed_probe.py sessions at the r14 code on a box reading
-    # 1.02-1.23 vs its own controls — evidence committed at
-    # plans/r14/warmed_probe_r14_{1,2,3}.json (minhash 0.666/0.763/0.937,
-    # cc 2.479/2.904/3.040). The old 1.27/3.9 predated this round's
-    # shuffle cuts and had gone conservative-loose.
-    "q_dedup_minhash": 0.67,
-    "q_dedup_ngram_jaccard": 1.14,
-    "q_graph_cc": 2.48,
-    "q_join_multiway": 0.836,
-    "q_join_range": 0.444,
-    "q_win_topk_group": 0.522,
-}
-WARMED_RATIO = 1.3
-# A key only flags when its warmed ratio ALSO exceeds the session's
-# overall slowdown by this much. Host-level contention (invisible to
-# guest loadavg) moves EVERY key 1.5-1.8x on a bad day (measured
-# 2026-08-16: session median vs-r01 1.79x with isolated idle-box
-# re-times still 1.5-1.7x) — per-key thresholds alone can't separate
-# "slow box" from "slow code"; ratio-relative-to-the-pack can.
-EXCESS_RATIO = 1.15
-# Box-factor normalization has a deliberate blind spot (r11 ADVICE): a
-# code change that slows MOST keys together inflates the box median
-# itself, so every per-key excess reads ~1.0x and nothing flags. The
-# gates cannot distinguish that from host contention without evidence
-# from OUTSIDE the session, so when the box factor exceeds this bound
-# the run records a loud advisory demanding co-measured idle-box
-# evidence (an isolated tools/warmed_probe.py run on a recovered box)
-# before the session is classified as contention.
-BOX_ADVISORY_BOUND = 1.5
-# r12 ADVICE closed the remaining gap: the advisory above was
-# print-only, so in SPARK_GRAFT_BENCH_STRICT a uniform slowdown still
-# exited 0. Now an elevated box factor WITHOUT recorded idle-box
-# evidence joins the returned flag list itself — at BOX_ADVISORY_BOUND
-# in default mode (driver runs; rc stays 0, the flag is data for the
-# verdict) and at the tighter BOX_STRICT_BOUND in strict mode (the
-# local refactor loop runs before/after in the SAME boot, so any box
-# jump past ~1.25x is the change, not the host, until proven
-# otherwise). Evidence = $SPARK_GRAFT_BOX_EVIDENCE pointing at a
-# tools/warmed_probe.py JSON whose co-measured controls read clean
-# (control_box <= 1.2) against the SAME git HEAD — controls healthy on
-# an idle box at this exact code means the slowness is the host.
-BOX_STRICT_BOUND = 1.25
-BOX_EVIDENCE_CONTROL_MAX = 1.2
-# Absolute per-key raw ceiling (r12 verdict item 3): box-INDEPENDENT,
-# so no amount of box-factor inflation can hide a key this far past
-# its warmed/r01 anchor. 2.5x sits above the worst honest contention
-# reading ever recorded against a warmed anchor (1.9x) and below the
-# r11-style real regressions it exists to catch.
-RAW_CEILING = 2.5
-
-
-def idle_box_evidence() -> bool:
-    """True when $SPARK_GRAFT_BOX_EVIDENCE names a tools/warmed_probe.py
-    JSON record that certifies the current code on an idle box: its
-    co-measured control_box must read <= BOX_EVIDENCE_CONTROL_MAX and
-    its git_head must equal the current HEAD (controls healthy on an
-    idle box at this exact code ==> a slow session is the host, not a
-    code regression). Any missing/stale/contended record is NOT
-    evidence."""
-    path = os.environ.get("SPARK_GRAFT_BOX_EVIDENCE")
-    if not path or not os.path.exists(path):
-        return False
-    try:
-        with open(path) as f:
-            rec = json.loads(f.read().strip().splitlines()[-1])
-        control = rec.get("control_box")
-        head = rec.get("git_head")
-        if control is None or head is None:
-            return False
-        if control > BOX_EVIDENCE_CONTROL_MAX:
-            return False
-        import subprocess
-
-        cur = subprocess.run(
-            ["git", "-C", os.path.dirname(os.path.abspath(__file__)),
-             "rev-parse", "HEAD"],
-            capture_output=True, text=True, check=True,
-        ).stdout.strip()
-        return head == cur
-    except Exception:
-        return False
-
-
-def session_box_factor(best: dict[str, float], sf: str):
-    """Median min-of-passes/r01-anchor ratio across every timed key the
-    anchor file knows — an estimate of how much slower THIS session's
-    box is than the r01 session, independent of any single key. None
-    when the anchor file is absent or recorded at a different SF."""
-    if not os.path.exists(ANCHOR):
-        return None
-    with open(ANCHOR) as f:
-        anchor = json.load(f)
-    anchor = anchor.get("parsed", anchor)
-    if float(sf) != float(anchor.get("sf", -1)):
-        return None
-    ratios = [
-        sec / base
-        for name, sec in best.items()
-        if (base := anchor.get("queries", {}).get(name))
-    ]
-    return round(statistics.median(ratios), 2) if ratios else None
-
-
-def warmed_advisory(best: dict[str, float], box=None) -> dict:
-    """Advisory (never exits): per-key min-of-passes vs the isolated
-    warmed anchors above at the 1.3x convention, normalized by the
-    session box factor — a key flags only when it is slow IN EXCESS of
-    the whole session's slowdown. Returned for embedding into
-    bench_detail.json so each round records WHICH anchor set and box
-    factor the advisory used (r10 verdict item 3)."""
-    ratios, excess = {}, {}
-    for name, base in WARMED_ANCHORS.items():
-        sec = best.get(name)
-        if sec is None:
-            continue
-        ratio = round(sec / base, 2)
-        ratios[name] = ratio
-        rel = round(ratio / box, 2) if box else None
-        if rel is not None:
-            excess[name] = rel
-        flagged = ratio > WARMED_RATIO and (rel is None or rel > EXCESS_RATIO)
-        flag = " ADVISORY-EXCEEDED" if flagged else ""
-        rel_txt = f", {rel:.2f}x vs session box factor" if rel else ""
-        print(
-            f"# vs warmed anchor: {name} {sec:.3f}s / {base:.3f}s "
-            f"= {ratio:.2f}x (limit {WARMED_RATIO}x{rel_txt}){flag}",
-            file=sys.stderr,
-        )
-    box_exceeded = box is not None and box > BOX_ADVISORY_BOUND
-    if box_exceeded:
-        print(
-            f"# BOX-FACTOR ADVISORY: session box factor {box:.2f}x exceeds "
-            f"{BOX_ADVISORY_BOUND}x — a uniform code slowdown would look "
-            "exactly like this (it inflates the median the per-key excess "
-            "divides by). Do NOT classify as host contention without "
-            "co-measured idle-box evidence: re-run tools/warmed_probe.py "
-            "on a recovered box and compare its controls.",
-            file=sys.stderr,
-        )
-    return {
-        "anchor_set": "isolated-warmed (BASELINE.md; r9 udf/ngram, "
-                      "r11 sessionize, r10 ingest band top, "
-                      "r12 ngram_jaccard, "
-                      "r13 multiway/range/topk raw-min-of-3, "
-                      "r14 minhash/graph_cc probe-min-of-3 — "
-                      "plans/r14/warmed_probe_r14_*.json)",
-        "anchors": dict(WARMED_ANCHORS),
-        "ratio_limit": WARMED_RATIO,
-        "ratios": ratios,
-        "session_box_factor_vs_r01": box,
-        "excess_vs_box": excess,
-        "excess_limit": EXCESS_RATIO,
-        "box_factor_advisory": {
-            "bound": BOX_ADVISORY_BOUND,
-            "exceeded": box_exceeded,
-            "note": "when exceeded, contention-vs-code is undecidable "
-                    "from this session alone; needs an idle-box "
-                    "warmed_probe run",
-        },
-    }
-
-
-def check_regressions(timings: dict[str, float], sf: str) -> list:
-    """Hard regression gate — SAME conventions as the 1.3x advisory, so
-    one run can never carry two contradictory verdicts (r11 verdict
-    item 4; the r11 driver run flagged q_dedup_minhash 2.00x here while
-    the advisory correctly stayed quiet). Pinned convention, contract-
-    tested by tests/test_bench_output.py::test_hard_gate_convention_*:
-
-      * a key's base is its isolated WARMED anchor where one is
-        documented (WARMED_ANCHORS — the honest post-r01 baseline),
-        else its BENCH_r01 in-bench number;
-      * a key (and TOTAL) flags on its BOX-NORMALIZED ratio — raw ratio
-        divided by max(box factor, 1.0) — exceeding QUERY_RATIO /
-        TOTAL_RATIO; raw ratios still print per key for context. The
-        clamp matters: the box factor models host CONTENTION, so it may
-        only excuse slowness, never amplify it — on a faster-than-r01
-        box an unclamped divisor would flag ratios the advisory's 1.3x
-        limit doesn't even reach, recreating the two-verdicts bug from
-        the other side.
-
-    Because QUERY_RATIO (2.0) > WARMED_RATIO (1.3), both gates read the
-    same anchors, and the clamped divisor is >= 1, a hard per-key flag
-    implies an advisory flag — severity is monotone by construction
-    (pinned as a hypothesis property).
-    Returns the flagged list (empty = clean) so tests can pin behavior.
-    """
-    if not os.path.exists(ANCHOR):
-        return []
-    with open(ANCHOR) as f:
-        anchor = json.load(f)
-    # the driver's BENCH_r{N}.json wraps the bench line under "parsed"
-    anchor = anchor.get("parsed", anchor)
-    if float(sf) != float(anchor.get("sf", -1)):
-        return []
-    # Box factor first: every flag below is read against it. When the
-    # MEDIAN itself is high the whole box is slow (host contention moves
-    # every key together — BASELINE.md r11 natural experiment: same
-    # code, box 1.79x vs 1.10x, per-key ratios 1.6-1.8x vs 0.7-1.1x).
-    box = session_box_factor(timings, sf)
-    eff_box = box if box and box > 1.0 else 1.0
-    regressions = []
-    tot_now = tot_base = 0.0
-    for name, sec in timings.items():
-        base = WARMED_ANCHORS.get(name) or anchor.get("queries", {}).get(name)
-        if not base:
-            continue
-        ratio = sec / base
-        norm = ratio / eff_box
-        tot_now, tot_base = tot_now + sec, tot_base + base
-        src = "warmed" if name in WARMED_ANCHORS else "r01"
-        flag = " REGRESSION" if norm > QUERY_RATIO else ""
-        if ratio > RAW_CEILING:
-            flag += " RAW-CEILING"
-        print(f"# vs {src} anchor: {name} {sec:.3f}s / {base:.3f}s = "
-              f"{ratio:.2f}x raw, {norm:.2f}x box-normalized{flag}",
-              file=sys.stderr)
-        if norm > QUERY_RATIO:
-            regressions.append((name, round(norm, 2)))
-        # Box-independent backstop: past this raw ratio no box factor
-        # may excuse the key (r12 verdict item 3 — normalization must
-        # never be able to hide an arbitrarily large single-key
-        # regression behind a contended-looking session).
-        if ratio > RAW_CEILING:
-            regressions.append((f"RAW:{name}", round(ratio, 2)))
-    if tot_base and (tot_now / tot_base) / eff_box > TOTAL_RATIO:
-        regressions.append(("TOTAL", round((tot_now / tot_base) / eff_box, 2)))
-    # Uniform-slowdown tripwire (r12 ADVICE, medium): an elevated box
-    # factor is exactly what a code change that slows MOST keys looks
-    # like — it inflates the median every normalized ratio divides by.
-    # Without idle-box evidence for THIS code it is a flag, not an
-    # excuse: at the advisory bound always (returned as data; default
-    # mode still exits 0), and at the tighter strict bound when
-    # SPARK_GRAFT_BENCH_STRICT gates a same-boot refactor loop.
-    strict = bool(os.environ.get("SPARK_GRAFT_BENCH_STRICT"))
-    box_bound = BOX_STRICT_BOUND if strict else BOX_ADVISORY_BOUND
-    if box is not None and box > box_bound and not idle_box_evidence():
-        regressions.append(("BOX_FACTOR", box))
-        print(f"# BOX_FACTOR flag: session box factor {box:.2f}x exceeds "
-              f"{box_bound}x with no idle-box evidence "
-              "($SPARK_GRAFT_BOX_EVIDENCE) — a uniform code slowdown "
-              "reads exactly like this; run tools/warmed_probe.py on a "
-              "recovered box to classify it as contention.",
-              file=sys.stderr)
-    if box is not None:
-        print(f"# session box factor {box:.2f}x (median vs r01; hard flags "
-              "above are ratio/box — same normalization as the advisory)",
-              file=sys.stderr)
-    # Two distinct verdicts in the summary line: code-regression flags
-    # (per-key / RAW ceiling / TOTAL) vs the session-level BOX_FACTOR
-    # evidence demand — conflating them recreated the r11 two-verdicts
-    # confusion from a new side.
-    code_flags = [r for r in regressions if r[0] != "BOX_FACTOR"]
-    if code_flags:
-        print(f"BENCH REGRESSION (box-normalized > {QUERY_RATIO}x/query, "
-              f"raw > {RAW_CEILING}x/query, or {TOTAL_RATIO}x total) vs "
-              f"warmed/r01 anchors (session box factor {box}): "
-              f"{code_flags}",
-              file=sys.stderr)
-    if regressions:
-        # Exit non-zero only in opt-in strict mode (local refactor loop).
-        # The default stays rc=0: boot-to-boot VM variance alone moves the
-        # total ~1.5x (measured 2026-08-13, same code both sides), and the
-        # driver records bench rc verbatim — a noise-tripped rc=1 would
-        # read as a broken bench, which is worse than the warning.
-        if strict:
-            sys.exit(1)
-    return regressions
 
 
 if __name__ == "__main__":

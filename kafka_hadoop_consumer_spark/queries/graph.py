@@ -382,12 +382,6 @@ CC_LAST_ROUNDS: dict[str, int] = {}  # observability: rounds to fixpoint
 # per-round edge-set sizes of the last run (index 0 = input edges) — the
 # bench scaling probe records these to evidence the O(log V) round claim
 CC_LAST_EDGE_COUNTS: dict[str, list[int]] = {}
-# per-round wall seconds of the last run (index 0 = the input-edge
-# materialization round, then one entry per star round; "confirm" = the
-# exceptAll fixpoint double-check). tools/profile_cc.py reads this to
-# attribute primary-vs-control spread to a specific round (r11 verdict
-# item 2); cost is two perf_counter() calls per round.
-CC_LAST_ROUND_WALLS: dict[str, dict] = {}
 
 
 @query(
@@ -526,18 +520,11 @@ def cc_from_edges(
     # dropping the Python reference each round makes the old round's
     # RDD unreachable, and Spark's ContextCleaner unpersists it on GC —
     # eventual, which is fine for a dozen small per-round edge sets.
-    import time as _time
-
-    t0 = _time.perf_counter()
     E, prev = checkpoint_with_fingerprint(E)
-    round_walls = [round(_time.perf_counter() - t0, 4)]
-    confirm_wall = 0.0
     edge_counts = [int(prev[0])]
     for rounds in range(1, max_rounds + 1):
         prev_frame = E
-        t0 = _time.perf_counter()
         E, cur = checkpoint_with_fingerprint(star_round(E))
-        round_walls.append(round(_time.perf_counter() - t0, 4))
         edge_counts.append(int(cur[0]))
         # fingerprint equality is probabilistic (count is exact, the
         # hash-sum could collide); confirm the fixpoint EXACTLY once —
@@ -545,12 +532,8 @@ def cc_from_edges(
         # empty ⇒ set equality. A collision (non-empty diff) just means
         # the loop keeps iterating; wrong components can never be
         # emitted (r6 advice).
-        if cur == prev:
-            t0 = _time.perf_counter()
-            confirmed = E.exceptAll(prev_frame).isEmpty()
-            confirm_wall = round(_time.perf_counter() - t0, 4)
-            if confirmed:
-                break
+        if cur == prev and E.exceptAll(prev_frame).isEmpty():
+            break
         prev = cur
     else:
         raise RuntimeError(
@@ -558,7 +541,6 @@ def cc_from_edges(
         )
     CC_LAST_ROUNDS[key] = rounds
     CC_LAST_EDGE_COUNTS[key] = edge_counts
-    CC_LAST_ROUND_WALLS[key] = {"rounds": round_walls, "confirm": confirm_wall}
     # fixpoint: E = {(node, component_min) | node != component_min};
     # add the self-rooted representatives back in. r14 (guide §2.4): the
     # confirmed fixpoint is a STAR FOREST — a chain (a→b, b→c) cannot

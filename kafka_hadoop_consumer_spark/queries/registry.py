@@ -78,6 +78,15 @@ def _on_query_start(name: str) -> None:
         _TRACKED.clear()
 
 
+def fan_out_fires(df: DataFrame) -> bool:
+    """``fan_out``'s trigger: the input plans at most half of the
+    session's ``defaultParallelism`` in partitions."""
+    return (
+        df.rdd.getNumPartitions() * 2
+        <= df.sparkSession.sparkContext.defaultParallelism
+    )
+
+
 def fan_out(df: DataFrame, *cols: str) -> DataFrame:
     """Scale-adaptive scan fan-out (optimization guide §2.5 "input
     skew": one huge unsplittable file → repartition immediately after
@@ -99,10 +108,9 @@ def fan_out(df: DataFrame, *cols: str) -> DataFrame:
     parallelism), not a local constant — a 100 TB scan plans orders of
     magnitude more splits than cores, so this is a no-op there and the
     at-scale plans are unchanged."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() * 2 > target:
+    if not fan_out_fires(df):
         return df
+    target = df.sparkSession.sparkContext.defaultParallelism
     if cols:
         from pyspark.sql import functions as F
 

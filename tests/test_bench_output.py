@@ -137,270 +137,6 @@ def test_committed_real_payload_fits_budget():
     )
 
 
-def test_warmed_advisory_reads_warmed_anchors():
-    # r10 verdict item 3: the 1.3x advisory must read the isolated
-    # WARMED anchors (not the fast-boot r01 in-bench numbers) and the
-    # payload must record which anchor set was used.
-    best = {
-        "q_udf_scalar": bench.WARMED_ANCHORS["q_udf_scalar"] * 1.29,
-        "q_text_ngram": bench.WARMED_ANCHORS["q_text_ngram"] * 1.31,
-        "q_agg_groupby": 99.9,  # not a warmed-anchored key: ignored
-    }
-    gate = bench.warmed_advisory(best)
-    assert gate["ratios"]["q_udf_scalar"] == 1.29  # inside, no flag
-    assert gate["ratios"]["q_text_ngram"] == 1.31
-    assert "q_agg_groupby" not in gate["ratios"]
-    assert gate["ratio_limit"] == bench.WARMED_RATIO == 1.3
-    assert "isolated-warmed" in gate["anchor_set"]
-    assert gate["session_box_factor_vs_r01"] is None  # no box passed
-
-
-def test_warmed_advisory_box_factor_suppresses_slow_box(capsys):
-    # Host contention moves every key ~1.8x together (measured
-    # 2026-08-16); a key at 1.8x the warmed anchor on a 1.79x box is
-    # the box, not the code — no flag. The same ratio on a 1.0x box
-    # IS the code — flag.
-    best = {"q_udf_scalar": bench.WARMED_ANCHORS["q_udf_scalar"] * 1.8}
-    gate = bench.warmed_advisory(best, box=1.79)
-    out = capsys.readouterr().err
-    assert "ADVISORY-EXCEEDED" not in out
-    assert gate["excess_vs_box"]["q_udf_scalar"] == 1.01
-    assert gate["session_box_factor_vs_r01"] == 1.79
-    gate = bench.warmed_advisory(best, box=1.0)
-    assert "ADVISORY-EXCEEDED" in capsys.readouterr().err
-    # and without a box factor the absolute 1.3x limit alone decides
-    bench.warmed_advisory(best, box=None)
-    assert "ADVISORY-EXCEEDED" in capsys.readouterr().err
-
-
-def test_session_box_factor_is_median_vs_r01(tmp_path, monkeypatch):
-    import json as _json
-
-    anchor = {"sf": 0.1, "queries": {"a": 1.0, "b": 2.0, "c": 4.0}}
-    p = tmp_path / "r01.json"
-    p.write_text(_json.dumps(anchor))
-    monkeypatch.setattr(bench, "ANCHOR", str(p))
-    best = {"a": 1.5, "b": 4.0, "c": 4.0, "unknown": 99.0}
-    # ratios 1.5, 2.0, 1.0 -> median 1.5; unknown keys ignored
-    assert bench.session_box_factor(best, "0.1") == 1.5
-    assert bench.session_box_factor(best, "0.01") is None  # sf mismatch
-    monkeypatch.setattr(bench, "ANCHOR", str(tmp_path / "missing.json"))
-    assert bench.session_box_factor(best, "0.1") is None
-    # every warmed-anchored key is a headline/ingest entry the bench
-    # actually times — a typo'd key would silently never be checked
-    timed = set(bench.HEADLINE) | {"s_ingest_e2e"}
-    assert set(bench.WARMED_ANCHORS) <= timed
-
-
-def _anchor_file(tmp_path, monkeypatch, queries: dict) -> None:
-    import json as _json
-
-    p = tmp_path / "r01.json"
-    p.write_text(_json.dumps({"sf": 0.1, "queries": queries}))
-    monkeypatch.setattr(bench, "ANCHOR", str(p))
-
-
-def test_hard_gate_convention_box_normalized(tmp_path, monkeypatch, capsys):
-    # r11 verdict item 4 — the PINNED convention: the hard gate flags on
-    # the box-NORMALIZED ratio (raw ratio / session box factor), the
-    # same normalization the 1.3x advisory applies, so one run cannot
-    # carry two contradictory regression verdicts. Keys here are not
-    # warmed-anchored, isolating the normalization itself.
-    anchors = {f"k{i}": 1.0 for i in range(9)}
-    _anchor_file(tmp_path, monkeypatch, anchors)
-    # contended box: most keys ~1.6x, one at 2.5x raw -> 1.56x normalized
-    timings = {f"k{i}": 1.6 for i in range(8)}
-    timings["k8"] = 2.5
-    flagged = bench.check_regressions(timings, "0.1")
-    err = capsys.readouterr().err
-    # no PER-KEY flag (2.5x raw on a 1.6x box normalizes to 1.56x) —
-    # but the 1.6x box itself now returns a BOX_FACTOR data flag (r12
-    # ADVICE): contention is a claim that needs idle-box evidence.
-    assert flagged == [("BOX_FACTOR", 1.6)], flagged
-    assert "box-normalized" in err
-    # same 2.5x raw reading on an idle box IS the code -> flags at 2.5x
-    timings = {f"k{i}": 1.0 for i in range(8)}
-    timings["k8"] = 2.5
-    flagged = bench.check_regressions(timings, "0.1")
-    assert ("k8", 2.5) in flagged
-
-
-def test_hard_gate_total_is_box_normalized(tmp_path, monkeypatch):
-    # a uniformly 1.6x session (pure contention) must not flag TOTAL
-    # (raw total ratio 1.6 > 1.4, but normalized 1.6/1.6 = 1.0) — the
-    # only flag left is the session-level BOX_FACTOR demand for
-    # idle-box evidence (r12 ADVICE)
-    anchors = {f"k{i}": 1.0 for i in range(9)}
-    _anchor_file(tmp_path, monkeypatch, anchors)
-    flagged = bench.check_regressions(dict.fromkeys(anchors, 1.6), "0.1")
-    assert flagged == [("BOX_FACTOR", 1.6)], flagged
-    # a uniformly 1.5x-normalized-excess session does flag TOTAL: every
-    # key 1.5x on a box whose median is... itself 1.5 -> normalized 1.0.
-    # TOTAL only fires when the total outruns the median (skewed mass):
-    timings = dict.fromkeys(anchors, 1.0)
-    timings["k0"] = timings["k1"] = timings["k2"] = timings["k3"] = 8.0
-    flagged = bench.check_regressions(timings, "0.1")
-    assert flagged and flagged[-1][0] == "TOTAL"
-
-
-def test_hard_gate_reads_warmed_anchors_replaying_r11(tmp_path, monkeypatch, capsys):
-    # The r11 false alarm, replayed: q_dedup_minhash min-of-passes
-    # 1.634 s was exactly 2.00x its fast-boot r01 in-bench 0.816 s on a
-    # 1.59x box and the old gate flagged it while the advisory stayed
-    # quiet. Against its documented warmed anchor (1.27 s, BASELINE.md
-    # r5/r12) and the box factor, the same reading must stay clean.
-    # The HISTORICAL anchor is pinned here (anchors re-tighten as the
-    # code gets faster — r14 moved minhash to 0.67 — and the replay's
-    # meaning is tied to the anchor that was current at r11).
-    monkeypatch.setitem(bench.WARMED_ANCHORS, "q_dedup_minhash", 1.27)
-    anchors = {f"k{i}": 1.0 for i in range(8)}
-    anchors["q_dedup_minhash"] = 0.816
-    _anchor_file(tmp_path, monkeypatch, anchors)
-    timings = {f"k{i}": 1.59 for i in range(8)}
-    timings["q_dedup_minhash"] = 1.634
-    flagged = bench.check_regressions(timings, "0.1")
-    err = capsys.readouterr().err
-    # per-key verdict stays clean (the r11 fix); the 1.59x box itself
-    # returns the session-level BOX_FACTOR data flag (r12 ADVICE)
-    assert flagged == [("BOX_FACTOR", 1.59)], flagged
-    assert "REGRESSION" not in err
-    assert "q_dedup_minhash 1.634s / 1.270s" in err  # warmed base used
-
-
-def test_raw_ceiling_flags_regardless_of_box(tmp_path, monkeypatch):
-    # r12 verdict item 3: past RAW_CEILING no box factor may excuse a
-    # key — box-normalization must never hide an arbitrarily large
-    # single-key regression behind a contended-looking session.
-    anchors = {f"k{i}": 1.0 for i in range(9)}
-    _anchor_file(tmp_path, monkeypatch, anchors)
-    timings = {f"k{i}": 1.6 for i in range(8)}  # box median 1.6
-    timings["k8"] = 2.6                          # 2.6x raw, 1.63x normalized
-    flagged = bench.check_regressions(timings, "0.1")
-    assert ("RAW:k8", 2.6) in flagged, flagged
-    # normalized 1.63x stays under QUERY_RATIO — only the raw ceiling
-    # (and the 1.6x-box evidence demand) fire
-    assert ("k8", 2.6) not in flagged
-
-
-def test_uniform_slowdown_fails_strict_mode(tmp_path, monkeypatch, capsys):
-    # r12 ADVICE (medium): a uniform code slowdown inflates the box
-    # median itself, so every normalized ratio reads ~1.0x; previously
-    # SPARK_GRAFT_BENCH_STRICT exited 0 on exactly that shape. Now a
-    # synthetic uniform 1.4x slowdown flags BOX_FACTOR in strict mode
-    # (same-boot refactor loop — any box jump past BOX_STRICT_BOUND
-    # without idle-box evidence blocks).
-    import pytest
-
-    anchors = {f"k{i}": 1.0 for i in range(9)}
-    _anchor_file(tmp_path, monkeypatch, anchors)
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_STRICT", "1")
-    monkeypatch.delenv("SPARK_GRAFT_BOX_EVIDENCE", raising=False)
-    with pytest.raises(SystemExit):
-        bench.check_regressions(dict.fromkeys(anchors, 1.4), "0.1")
-    assert "BOX_FACTOR flag" in capsys.readouterr().err
-    # default (non-strict) mode: 1.4x sits under the 1.5x advisory
-    # bound — recorded box variance, no flag, rc stays 0
-    monkeypatch.delenv("SPARK_GRAFT_BENCH_STRICT")
-    assert bench.check_regressions(dict.fromkeys(anchors, 1.4), "0.1") == []
-
-
-def test_idle_box_evidence_suppresses_box_flag(tmp_path, monkeypatch):
-    # A warmed_probe record with clean co-measured controls at the
-    # CURRENT git HEAD certifies "this code on an idle box is fine" —
-    # the box flag downgrades back to host contention.
-    import json as _json
-    import os
-    import subprocess
-
-    anchors = {f"k{i}": 1.0 for i in range(9)}
-    _anchor_file(tmp_path, monkeypatch, anchors)
-    head = subprocess.run(
-        ["git", "-C", os.path.dirname(bench.__file__), "rev-parse", "HEAD"],
-        capture_output=True, text=True, check=True,
-    ).stdout.strip()
-    ev = tmp_path / "probe.json"
-    ev.write_text(_json.dumps({"control_box": 1.1, "git_head": head}) + "\n")
-    monkeypatch.setenv("SPARK_GRAFT_BOX_EVIDENCE", str(ev))
-    flagged = bench.check_regressions(dict.fromkeys(anchors, 1.6), "0.1")
-    assert flagged == [], flagged
-    # a contended probe (controls slow too) is NOT evidence
-    ev.write_text(_json.dumps({"control_box": 1.5, "git_head": head}) + "\n")
-    assert bench.check_regressions(
-        dict.fromkeys(anchors, 1.6), "0.1") == [("BOX_FACTOR", 1.6)]
-    # nor is one stamped against different code
-    ev.write_text(_json.dumps(
-        {"control_box": 1.1, "git_head": "0" * 40}) + "\n")
-    assert bench.check_regressions(
-        dict.fromkeys(anchors, 1.6), "0.1") == [("BOX_FACTOR", 1.6)]
-
-
-def test_hard_flag_implies_advisory_flag(tmp_path, monkeypatch, capsys):
-    # Monotone severity: whenever the hard gate flags a warmed-anchored
-    # key, the advisory must flag it too (QUERY_RATIO > WARMED_RATIO and
-    # both divide by the same box factor over the same anchor).
-    anchors = {f"k{i}": 1.0 for i in range(8)}
-    anchors["q_udf_scalar"] = bench.WARMED_ANCHORS["q_udf_scalar"]
-    _anchor_file(tmp_path, monkeypatch, anchors)
-    timings = {f"k{i}": 1.0 for i in range(8)}
-    timings["q_udf_scalar"] = bench.WARMED_ANCHORS["q_udf_scalar"] * 2.6
-    flagged = bench.check_regressions(timings, "0.1")
-    assert ("q_udf_scalar", 2.6) in flagged
-    box = bench.session_box_factor(timings, "0.1")
-    bench.warmed_advisory(timings, box=box)
-    assert "ADVISORY-EXCEEDED" in capsys.readouterr().err
-
-
-def test_hard_flag_implies_advisory_flag_property(tmp_path, monkeypatch, capsys):
-    # The monotone-severity claim as a PROPERTY over random sessions:
-    # for any timings, any warmed-anchored key the hard gate flags must
-    # also be advisory-flagged when the advisory reads the same box.
-    # (QUERY_RATIO > WARMED_RATIO and both divide by the same box over
-    # the same anchor — this pins that the implementations stay aligned.)
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    warmed_keys = sorted(bench.WARMED_ANCHORS)
-    anchors = {f"k{i}": 1.0 for i in range(8)}
-
-    @settings(max_examples=40, deadline=None)
-    @given(
-        filler=st.floats(min_value=0.5, max_value=3.0),
-        mults=st.lists(
-            st.floats(min_value=0.5, max_value=4.0),
-            min_size=len(warmed_keys), max_size=len(warmed_keys),
-        ),
-    )
-    def prop(filler, mults):
-        _anchor_file(tmp_path, monkeypatch, anchors)
-        timings = {f"k{i}": filler for i in range(8)}
-        for k, m in zip(warmed_keys, mults):
-            timings[k] = bench.WARMED_ANCHORS[k] * m
-        flagged = dict(bench.check_regressions(timings, "0.1"))
-        capsys.readouterr()
-        box = bench.session_box_factor(timings, "0.1")
-        bench.warmed_advisory(timings, box=box)
-        err = capsys.readouterr().err
-        for k in warmed_keys:
-            if k in flagged:
-                line = [ln for ln in err.splitlines() if f" {k} " in ln]
-                assert line and "ADVISORY-EXCEEDED" in line[0], (k, flagged, err)
-
-    prop()
-
-
-def test_box_factor_advisory_records_blind_spot(capsys):
-    # r11 ADVICE: a uniform code slowdown inflates the box median itself
-    # and every per-key excess reads ~1.0x — the gate must say so loudly
-    # instead of auto-classifying the session as host contention.
-    best = {"q_udf_scalar": bench.WARMED_ANCHORS["q_udf_scalar"] * 1.6}
-    gate = bench.warmed_advisory(best, box=1.62)
-    assert gate["box_factor_advisory"]["exceeded"] is True
-    assert "BOX-FACTOR ADVISORY" in capsys.readouterr().err
-    gate = bench.warmed_advisory(best, box=1.2)
-    assert gate["box_factor_advisory"]["exceeded"] is False
-    assert "BOX-FACTOR ADVISORY" not in capsys.readouterr().err
-
-
 def test_overflow_falls_back_to_minimal_line():
     detail = _full_detail()
     detail["metric"] = "x" * 2000  # pathological: force the fallback

@@ -5,6 +5,7 @@ broadcast, top-k never globally sorts, hot paths stay in codegen."""
 
 from __future__ import annotations
 
+from kafka_hadoop_consumer_spark.catalog import load_table
 from kafka_hadoop_consumer_spark.plans import (
     has_broadcast_hash_join,
     has_take_ordered,
@@ -13,22 +14,15 @@ from kafka_hadoop_consumer_spark.plans import (
     wholestage_codegen_ids,
 )
 from kafka_hadoop_consumer_spark.queries import QUERIES
+from kafka_hadoop_consumer_spark.queries.registry import fan_out_fires
 from tests.conftest import SF_DIR
 
 
 def _fan_out_fires(spark, table: str) -> bool:
-    """Mirror registry.fan_out's trigger for a fixture table so shuffle
-    budgets that include a fan_out repartition stay correct on ANY host
-    core count or fixture row-group layout (r13 advice: the budgets were
-    pinned assuming the repartition fires, which a local[1]/local[2]
-    session or a multi-row-group fixture would silently falsify)."""
-    from kafka_hadoop_consumer_spark.catalog import load_table
-
-    df = load_table(spark, SF_DIR, table)
-    return (
-        df.rdd.getNumPartitions() * 2
-        <= spark.sparkContext.defaultParallelism
-    )
+    """Whether fan_out repartitions this fixture table, so shuffle budgets
+    that include a fan_out repartition hold on any core count or fixture
+    row-group layout."""
+    return fan_out_fires(load_table(spark, SF_DIR, table))
 
 
 def test_scan_pruned_pushes_predicate_and_prunes_columns(spark):

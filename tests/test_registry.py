@@ -28,17 +28,6 @@ def test_every_oracle_key_is_a_query_key():
     assert not orphans, f"oracle_sql keys without queries(): {sorted(orphans)}"
 
 
-def test_driver_window_shaping_preserves_registry():
-    # The _DEFER_TO_TAIL reorder must move keys, never add or drop them.
-    from kafka_hadoop_consumer_spark.queries import _DEFER_TO_TAIL
-
-    for k in _DEFER_TO_TAIL:
-        assert k in QUERIES, f"deferred key {k} missing from registry"
-    # Deferred keys sit at the tail of the dict, in defer-list order.
-    tail = list(QUERIES)[-len(_DEFER_TO_TAIL):]
-    assert tail == list(_DEFER_TO_TAIL)
-
-
 def test_no_complex_output_columns(spark):
     """No driver-facing key may return an Array/Map/Struct-typed column:
     the driver's canonicalizer sorts raw pandas values and dies on

@@ -1,8 +1,6 @@
-"""The r12 measurement tools (tools/warmed_probe.py, tools/profile_cc.py)
-are the anchors' provenance chain — if they bit-rot, the next re-anchor
-can't reproduce the protocol. These tests import them (no Spark session:
-both only build one inside main()) and pin their wiring to the registry
-and the anchor set."""
+"""tools/scale100_probe.py writes the def-hash-stamped 100x receipts in
+bench_100x.json. These tests import it (no Spark session: it only builds
+one inside main()) and pin its wiring to the registry."""
 
 import importlib.util
 import os
@@ -10,7 +8,6 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-import bench  # noqa: E402
 from kafka_hadoop_consumer_spark.queries import QUERIES  # noqa: E402
 
 
@@ -22,41 +19,6 @@ def _load(name):
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
-
-
-def test_warmed_probe_wiring():
-    wp = _load("warmed_probe")
-    # the warm-up set must stay runnable registry keys (a renamed key
-    # would make every future re-anchor crash before measuring)
-    assert set(wp.WARM_QUERIES) <= set(QUERIES)
-    # protocol parity: same warm-up queries as profile_cc (one protocol,
-    # not two drifting copies)
-    pc = _load("profile_cc")
-    assert tuple(pc.WARM_QUERIES) == tuple(wp.WARM_QUERIES)
-    assert pc.N_PASSES >= 2  # first timed pass ~ driver primary, rest ~ control
-
-
-def test_profile_cc_soak_slice_matches_bench_order():
-    # --soak runs "the headline queries preceding q_graph_cc in bench
-    # order"; that claim depends on cc being IN bench.HEADLINE
-    assert "q_graph_cc" in bench.HEADLINE
-    assert bench.HEADLINE.index("q_graph_cc") > 0
-
-
-def test_cc_anchor_matches_committed_profile():
-    # cross-artifact pin: the WARMED_ANCHORS value for q_graph_cc is the
-    # one bench_cc_profile.json's action paragraph records (3.9 s) — an
-    # anchor edit without a new profile receipt should fail here
-    import json
-
-    path = os.path.join(os.path.dirname(__file__), "..", "bench_cc_profile.json")
-    with open(path) as f:
-        prof = json.load(f)
-    anchor = bench.WARMED_ANCHORS["q_graph_cc"]
-    assert f"{anchor}s" in prof["action"], (
-        f"WARMED_ANCHORS['q_graph_cc']={anchor} but bench_cc_profile.json's "
-        "action records a different value — re-profile before re-anchoring"
-    )
 
 
 def test_scale100_probe_wiring_and_receipt_keys():
