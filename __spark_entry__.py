@@ -86,14 +86,13 @@ def _evidence_state() -> tuple:
         seen, rounds = _CHECKED_CACHE[cache_key]
         return set(seen), dict(rounds)
 
-    # Classification AND the file scan mirror tools/coverage_ledger (the
-    # loaded module's versions are preferred so the two cannot drift); a
-    # key counts as driver-checked only if its LATEST row is green or a
-    # rows-only record. Failed (and non-dict) rows re-enter the
-    # fresh-first window so a fix earns a fresh driver row. Any
-    # degradation here is LOUD (r6/r7 advice): ordering silently built
-    # on missing machinery would present old green rows as current.
-    led = None
+    # Classification and the file scan are tools/coverage_ledger's own
+    # (collect_rows/classify): a key counts as driver-checked only if its
+    # LATEST row is green or a rows-only record. Failed (and non-dict)
+    # rows re-enter the fresh-first window so a fix earns a fresh driver
+    # row. If the ledger cannot load, ordering is degraded LOUDLY to
+    # plain registration order: every key counts as checked at round 0,
+    # rather than presenting old green rows as current.
     try:
         import importlib.util
 
@@ -104,56 +103,18 @@ def _evidence_state() -> tuple:
     except Exception as exc:
         print(
             f"warning: tools/coverage_ledger.py unusable ({exc!r}); "
-            "driver-key ordering falls back to an inline scan and the "
-            "STALE re-entry mechanism is DISABLED",
+            "driver-key ordering falls back to plain registration order "
+            "and the STALE re-entry mechanism is DISABLED",
             file=sys.stderr,
         )
-        led = None
+        return set(QUERIES), {}
 
-    latest: dict = {}
-    rounds: dict = {}
-    if led is not None:
-        for k, (rnd, row) in led.collect_rows(repo=here).items():
-            latest[k] = row
-            rounds[k] = rnd
-    else:
-        for _rnd, path in sorted(paths):
-            try:
-                with open(path) as f:
-                    rows = json.load(f)
-            except (OSError, ValueError) as exc:
-                print(
-                    f"warning: skipping unreadable {path} ({exc}) — that "
-                    "round's evidence is IGNORED for ordering",
-                    file=sys.stderr,
-                )
-                continue
-            if not isinstance(rows, dict):
-                print(
-                    f"warning: {path} is not a key->row object — IGNORED "
-                    "for ordering",
-                    file=sys.stderr,
-                )
-                continue
-            for key, row in rows.items():
-                latest[key] = row
-                rounds[key] = _rnd
-
-    def _ok(row) -> bool:
-        if led is not None:
-            return led.classify(row) in ("hash-match", "rows-recorded")
-        if not isinstance(row, dict):
-            return False
-        err = row.get("err")
-        green = (
-            err is None
-            and row.get("hash_match")
-            and row.get("rows_match")
-            and row.get("schema_match")
-        )
-        return green or (err == "no_oracle" and row.get("spark_rows") is not None)
-
-    seen = {key for key, row in latest.items() if _ok(row)}
+    rows = led.collect_rows(repo=here)
+    rounds = {key: rnd for key, (rnd, _row) in rows.items()}
+    seen = {
+        key for key, (_rnd, row) in rows.items()
+        if led.classify(row) in ("hash-match", "rows-recorded")
+    }
     # STALE evidence re-enters the fresh window: a key whose (query
     # source + oracle) hash changed after its snapshotted evidencing
     # round (COVERAGE_DEFS.json, maintained by tools/coverage_ledger.py)
@@ -167,16 +128,15 @@ def _evidence_state() -> tuple:
     try:
         with open(os.path.join(here, "COVERAGE_DEFS.json")) as f:
             defs = json.load(f)
-        if led is not None:
-            for key in list(seen):
-                rec = defs.get(key)
-                if (
-                    isinstance(rec, dict)
-                    and rec.get("def_hash")
-                    and key in QUERIES
-                    and rec["def_hash"] != led.def_hash(key, QUERIES, ORACLES)
-                ):
-                    seen.discard(key)
+        for key in list(seen):
+            rec = defs.get(key)
+            if (
+                isinstance(rec, dict)
+                and rec.get("def_hash")
+                and key in QUERIES
+                and rec["def_hash"] != led.def_hash(key, QUERIES, ORACLES)
+            ):
+                seen.discard(key)
     except Exception as exc:  # degrade to registration order, but LOUDLY:
         # a dead STALE mechanism silently presents old green rows as
         # current ordering input (r6 advice)

@@ -1,13 +1,19 @@
-"""bench._probe_corpus_dir caches the scaling probes' synthetic input
-corpora. Its directory is keyed on n and the source of the two
+"""scale_probe._probe_corpus_dir caches the scale probes' synthetic
+input corpora. Its directory is keyed on n and the source of the two
 generators, and a build is renamed into place only once it is whole.
 Spark-free: the generators are replaced by fakes that write small files."""
 
+import importlib.util
 import os
 
 import pytest
 
-import bench
+_spec = importlib.util.spec_from_file_location(
+    "scale_probe",
+    os.path.join(os.path.dirname(__file__), "..", "tools", "scale_probe.py"),
+)
+scale_probe = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(scale_probe)
 
 BUILDS = []
 
@@ -32,23 +38,23 @@ def _interrupted(spark, n, out_dir):
 @pytest.fixture
 def cache(tmp_path, monkeypatch):
     BUILDS.clear()
-    monkeypatch.setattr(bench, "_PROBE_CACHE_ROOT", str(tmp_path))
-    monkeypatch.setattr(bench, "_synth_embeddings", _gen_a)
-    monkeypatch.setattr(bench, "_synth_documents", _gen_a)
+    monkeypatch.setattr(scale_probe, "_PROBE_CACHE_ROOT", str(tmp_path))
+    monkeypatch.setattr(scale_probe, "_synth_embeddings", _gen_a)
+    monkeypatch.setattr(scale_probe, "_synth_documents", _gen_a)
     return tmp_path
 
 
 def test_cache_dir_keys_on_generator_source_and_n(cache, monkeypatch):
-    d = bench._probe_corpus_dir(None, 10)
+    d = scale_probe._probe_corpus_dir(None, 10)
     assert os.listdir(d) == ["a.txt"]
     assert len(BUILDS) == 2
     # same generators, same n: the cached directory, no rebuild
-    assert bench._probe_corpus_dir(None, 10) == d
+    assert scale_probe._probe_corpus_dir(None, 10) == d
     assert len(BUILDS) == 2
     # another n, or an edited generator, gets its own directory
-    assert bench._probe_corpus_dir(None, 20) != d
-    monkeypatch.setattr(bench, "_synth_documents", _gen_b)
-    d_b = bench._probe_corpus_dir(None, 10)
+    assert scale_probe._probe_corpus_dir(None, 20) != d
+    monkeypatch.setattr(scale_probe, "_synth_documents", _gen_b)
+    d_b = scale_probe._probe_corpus_dir(None, 10)
     assert d_b != d
     assert sorted(os.listdir(d_b)) == ["a.txt", "b.txt"]
     # every build went to a temp dir, and only the finished ones remain
@@ -57,10 +63,10 @@ def test_cache_dir_keys_on_generator_source_and_n(cache, monkeypatch):
 
 
 def test_interrupted_build_leaves_no_corpus(cache, monkeypatch):
-    monkeypatch.setattr(bench, "_synth_documents", _interrupted)
+    monkeypatch.setattr(scale_probe, "_synth_documents", _interrupted)
     with pytest.raises(KeyboardInterrupt):
-        bench._probe_corpus_dir(None, 10)
+        scale_probe._probe_corpus_dir(None, 10)
     assert os.listdir(cache) == []
-    monkeypatch.setattr(bench, "_synth_documents", _gen_b)
-    d = bench._probe_corpus_dir(None, 10)
+    monkeypatch.setattr(scale_probe, "_synth_documents", _gen_b)
+    d = scale_probe._probe_corpus_dir(None, 10)
     assert sorted(os.listdir(d)) == ["a.txt", "b.txt"]

@@ -7,6 +7,7 @@ Also pins that the 100 TB ``cluster_profile()`` overlay actually LANDS on
 a SparkSession (conf round-trip), not merely constructs a dict.
 """
 
+import os
 import re
 
 from kafka_hadoop_consumer_spark.queries import ORACLES, QUERIES
@@ -82,6 +83,11 @@ def test_failed_driver_rows_reenter_fresh_window(tmp_path, monkeypatch):
         },
     }
     (tmp_path / "CORRECTNESS_r99.json").write_text(json.dumps(rows))
+    # symlinked tools/ makes _evidence_state load the REAL ledger module
+    # against tmp_path: its collect_rows/classify are the one scan
+    (tmp_path / "tools").symlink_to(
+        os.path.join(os.path.dirname(entrymod.__file__), "tools")
+    )
     monkeypatch.setattr(entrymod, "_repo_root", lambda: str(tmp_path))
     checked = entrymod._driver_checked_keys()
     assert "green_key" in checked
@@ -121,6 +127,27 @@ def test_stale_definition_reenters_fresh_window(tmp_path, monkeypatch):
     assert "q_agg_groupby" not in checked, (
         "definition changed since its evidencing round -> must re-enter"
     )
+
+
+def test_unusable_ledger_falls_back_to_registration_order(
+    tmp_path, monkeypatch, capsys
+):
+    """Without a loadable tools/coverage_ledger.py the driver-key order
+    degrades to plain registration order, with a loud warning, rather
+    than presenting old green rows as current evidence."""
+    import json
+
+    import __spark_entry__ as entrymod
+
+    (tmp_path / "CORRECTNESS_r1.json").write_text(json.dumps({
+        "q_agg_groupby": {
+            "rows_match": True, "schema_match": True, "hash_match": True,
+            "spark_rows": 1, "oracle_rows": 1, "err": None,
+        },
+    }))
+    monkeypatch.setattr(entrymod, "_repo_root", lambda: str(tmp_path))
+    assert list(entrymod.queries()) == list(QUERIES)
+    assert "falls back to plain registration order" in capsys.readouterr().err
 
 
 def test_cluster_profile_lands_on_session(spark):
@@ -200,8 +227,7 @@ def test_recheck_ordering_fronts_oldest_evidence(tmp_path, monkeypatch):
         json.dumps({"q_agg_global": green})
     )
     # symlinked tools/ makes _evidence_state load the REAL ledger module
-    # against tmp_path, so the PRIMARY collect_rows ordering path (not
-    # the led=None fallback scan) is what this test asserts
+    # against tmp_path
     (tmp_path / "tools").symlink_to("/root/repo/tools")
     monkeypatch.setattr(entrymod, "_repo_root", lambda: str(tmp_path))
     ordered = list(entrymod.queries())

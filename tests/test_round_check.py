@@ -55,7 +55,8 @@ def test_boot_refuses_real_work(tmp_path, monkeypatch):
 def test_stale_100x_receipt_warns(tmp_path, monkeypatch):
     # r10 verdict item 6: a receipt whose stamped def-hash no longer
     # matches the operator's current hash must surface a warning naming
-    # the probe command; fresh receipts and absent sidecars stay silent.
+    # the command that re-earns it; fresh receipts and absent sidecars
+    # stay silent.
     import json
 
     tools = tmp_path / "tools"
@@ -66,9 +67,10 @@ def test_stale_100x_receipt_warns(tmp_path, monkeypatch):
     monkeypatch.setattr(rc, "REPO", str(tmp_path))
     assert rc.stale_100x_receipts() == []  # no sidecar: silent
     (tmp_path / "bench_100x.json").write_text(json.dumps({
-        "recorded": "2026-08-15",
-        "command": "python tools/scale100_probe.py",
-        "def_hashes": {"q_agg_groupby": "cur"},
+        "embedding_100x": {
+            "recorded": "2026-08-15",
+            "def_hashes": {"q_agg_groupby": "cur"},
+        },
         "minhash_100x": {
             "recorded": "2026-08-16",
             "command": "python tools/scale100_probe.py --minhash",
@@ -81,7 +83,14 @@ def test_stale_100x_receipt_warns(tmp_path, monkeypatch):
     }))
     warns = rc.stale_100x_receipts()
     assert len(warns) == 2, warns
-    assert any("minhash_100x" in w and "--minhash" in w for w in warns)
+    # the command is derived from the section, not echoed from the
+    # receipt's stored (historical) one
+    assert any(
+        "minhash_100x" in w
+        and "`python tools/scale_probe.py minhash_100x`" in w
+        and "--minhash" not in w
+        for w in warns
+    ), warns
     assert any("unregistered" in w and "cc_100x" in w for w in warns)
 
 

@@ -1,6 +1,6 @@
-"""tools/scale100_probe.py writes the def-hash-stamped 100x receipts in
+"""tools/scale_probe.py writes the def-hash-stamped scale receipts in
 bench_100x.json. These tests import it (no Spark session: it only builds
-one inside main()) and pin its wiring to the registry."""
+one inside earn()) and pin its wiring to the registry."""
 
 import importlib.util
 import os
@@ -21,28 +21,32 @@ def _load(name):
     return mod
 
 
-def test_scale100_probe_wiring_and_receipt_keys():
+def test_scale_probe_wiring_and_receipt_keys():
     """bench_100x.json receipts are def-hash-stamped against registry
-    keys; a key rename (or a probe function deletion) would make the
-    receipts unre-earnable without failing anywhere. Pin both: every
-    stamped key still exists in the registry, and every probe entry
-    point the receipts' recorded commands name is still defined."""
+    keys; a key rename (or a dropped section) would make the receipts
+    unre-earnable without failing anywhere. Pin all three: every
+    committed section is a CLI choice of the tool, every choice stamps
+    registry keys, and every key a committed receipt stamps still
+    exists in the registry."""
     import json
 
-    sp = _load("scale100_probe")
-    for fn in ("probe_minhash", "probe_substring", "probe_cc",
-               "probe_hybrid", "probe_pagerank", "probe_bootstrap"):
-        assert callable(getattr(sp, fn)), f"scale100_probe.{fn} missing"
-
+    sp = _load("scale_probe")
     path = os.path.join(os.path.dirname(__file__), "..", "bench_100x.json")
     with open(path) as f:
         receipts = json.load(f)
+    unearnable = set(receipts) - set(sp.SECTIONS)
+    assert not unearnable, (
+        f"bench_100x.json sections no CLI choice re-earns: {unearnable}"
+    )
+    for section, (keys, body) in sp.SECTIONS.items():
+        assert callable(body), section
+        assert keys and set(keys) <= set(QUERIES), (
+            f"section {section} stamps {keys}, not all registry keys"
+        )
+
     stamped = set()
-    for section, rec in receipts.items():
-        if isinstance(rec, dict):
-            stamped |= set(rec.get("def_hashes", {}))
-    # top-level ANN receipt keeps def_hashes at the root
-    stamped |= set(receipts.get("def_hashes", {}))
+    for rec in receipts.values():
+        stamped |= set(rec.get("def_hashes", {}))
     assert stamped, "no def-hash-stamped keys found in bench_100x.json"
     missing = stamped - set(QUERIES)
     assert not missing, (

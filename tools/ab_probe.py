@@ -3,7 +3,8 @@
 
 Runs bench.time_query (same warm-up + median-of-3 + noop-sink protocol
 as the bench) on the given keys in a fresh bench-config session, after
-a short untimed JVM warm-up, and prints one JSON line. Run it on the
+the bench's untimed JVM warm-up (bench.warm_up), and prints one JSON
+line. Run it on the
 baseline code and the changed code back-to-back and compare per-key
 medians; include an untouched CONTROL key in both runs so ambient box
 contention can be separated from real deltas.
@@ -23,16 +24,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 from kafka_hadoop_consumer_spark import get_spark  # noqa: E402
-from kafka_hadoop_consumer_spark.queries import QUERIES  # noqa: E402
 
 
 def main(keys: list[str]) -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="ab_probe")
-    # untimed JVM/codegen warm-up: a representative mix, once each
-    for w in ("q_agg_groupby", "q_join_multiway", "q_udf_scalar"):
-        spark.sparkContext.setJobDescription(f"warmup {w} (untimed)")
-        bench.materialize(QUERIES[w](spark, sf_dir))
+    bench.warm_up(spark, sf_dir)
     out = {}
     t0 = time.perf_counter()
     for k in keys:

@@ -24,7 +24,8 @@ sys.path.insert(0, REPO)
 
 
 def classify(row: dict) -> str:
-    """One driver row -> result class (mirrors __spark_entry__'s logic)."""
+    """One driver row -> result class (also __spark_entry__'s ordering
+    input: only hash-match and rows-recorded rows count as checked)."""
     if not isinstance(row, dict):
         return "unknown"
     err = row.get("err")

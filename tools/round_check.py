@@ -114,12 +114,14 @@ def boot() -> int:
 
 
 def stale_100x_receipts() -> list[str]:
-    """Freshness check for the single-run 100x receipts (r10 verdict
+    """Freshness check for the single-run scale receipts (r10 verdict
     item 6): each bench_100x.json section snapshots the measured
-    operators' def-hashes at record time (tools/scale100_probe.py);
-    a mismatch with the CURRENT def-hash means the operator changed
-    after its receipt and the receipt should be re-run. Returns warning
-    strings; never fails the gate (receipts cost ~300 s each)."""
+    operators' def-hashes at record time (tools/scale_probe.py); a
+    mismatch with the CURRENT def-hash means the operator changed after
+    its receipt, and the warning names the command that re-earns it
+    (derived from the section: a stored ``command`` is historical).
+    Returns warning strings; never fails the gate (receipts cost up to
+    ~300 s each)."""
     import json
 
     import importlib.util
@@ -138,23 +140,20 @@ def stale_100x_receipts() -> list[str]:
     from kafka_hadoop_consumer_spark.queries import ORACLES, QUERIES
 
     out = []
-    sections = [("<top-level ANN/embedding>", doc)] + [
-        (name, sec) for name, sec in doc.items() if isinstance(sec, dict)
-    ]
-    for name, sec in sections:
-        hashes = sec.get("def_hashes")
+    for name, sec in doc.items():
+        hashes = sec.get("def_hashes") if isinstance(sec, dict) else None
         if not isinstance(hashes, dict):
             continue
         for key, snap in hashes.items():
             if key not in QUERIES:
                 out.append(
-                    f"100x receipt {name} measures unregistered key {key}"
+                    f"receipt {name} measures unregistered key {key}"
                 )
             elif led.def_hash(key, QUERIES, ORACLES) != snap:
                 out.append(
-                    f"100x receipt {name} (recorded "
+                    f"receipt {name} (recorded "
                     f"{sec.get('recorded', '?')}) predates a change to "
-                    f"{key} — re-run `{sec.get('command', 'the probe')}`"
+                    f"{key} — re-run `python tools/scale_probe.py {name}`"
                 )
     return out
 
