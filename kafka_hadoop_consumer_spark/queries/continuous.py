@@ -6,28 +6,33 @@ result against the plain batch SQL over the same rows.
 This is the "continuous aggregate / materialized view" contract every
 streaming warehouse (Timescale caggs, Materialize, Flink dynamic tables)
 makes: maintaining state incrementally over arriving chunks must be
-indistinguishable from recomputing over the full table. Six state
-shapes are gated, one per fundamentally different state-store path:
+indistinguishable from recomputing over the full table. The gated keys
+cover every fundamentally different state-store path, and each key
+whose shape has a streaming/ops.py builder calls that builder — so the
+operator under the oracle gate is the production one:
 
-- q_stream_continuous_agg — fixed tumbling windows (keyed state, windows
-  never merge);
+- q_stream_continuous_agg, q_stream_sliding_agg, q_stream_static_join,
+  q_stream_late_drop — windowed aggregates (keyed state; tumbling,
+  overlapping, after a stream-static join, and with late rows dropped)
+  via window_counts;
 - q_stream_sessionize — session windows (DYNAMIC state: sessions widen
-  and MERGE as out-of-order chunks arrive);
+  and MERGE as out-of-order chunks arrive) via session_counts;
 - q_stream_cdc_upsert — keyed last-write-wins upsert (the CDC
   materialized-view shape: one state row per entity, overwritten);
 - q_stream_dedup_exact — seen-key state (exactly-once ingest: duplicates
-  landed in different micro-batches are emitted once);
+  landed in different micro-batches are emitted once) via
+  dedup_within_watermark;
 - q_stream_join_interval — stream-stream join (state is buffered ROWS on
   BOTH unbounded sides, matched across micro-batches, evicted by the
   other side's watermark);
 - q_stream_stateful_counters — ARBITRARY user-defined value state
   (transformWithState where the runtime supports it, auto-downgraded to
-  applyInPandasWithState here — the probe lives in the key itself).
+  applyInPandasWithState here) via stateful_user_counters.
 
-The s_stream_* pytest suite drives the richer streaming surface (restart
-exactly-once, watermark eviction, stream-stream joins); these keys put
-the core incremental == batch equivalence under the driver's DuckDB
-hash gate.
+The batch keys q_win_tumbling_batch and q_win_session_native run the
+same window_counts and session_counts builders over the plain table.
+tests/test_streaming.py drives what a memory-sink harness cannot show
+(restart exactly-once, watermark eviction, the foreachBatch sinks).
 """
 
 from __future__ import annotations
@@ -38,11 +43,17 @@ import shutil
 import tempfile
 from itertools import count as _count
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_hadoop_consumer_spark.catalog import load_table
 from kafka_hadoop_consumer_spark.queries.registry import query
+from kafka_hadoop_consumer_spark.streaming.ops import (
+    dedup_within_watermark,
+    session_counts,
+    stateful_user_counters,
+    window_counts,
+)
 
 N_LANDING_FILES = 4  # micro-batches per run (maxFilesPerTrigger=1)
 
@@ -122,6 +133,32 @@ def _run_to_table(
     return spark.table(name)
 
 
+def _stream(spark: SparkSession, landing: str, schema) -> DataFrame:
+    """The landing dir as a stream, one file per micro-batch. Watermarks
+    require TIMESTAMP (event-time) — the fixture column is
+    TIMESTAMP_NTZ; under the UTC session the cast is wall-clock
+    preserving, and keys cast window bounds back to NTZ on output."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(landing)
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+    )
+
+
+def _with_cents(df: DataFrame) -> DataFrame:
+    """Exact integer cents: an order-insensitive sum, so the incremental
+    state merge is bit-equal to the batch recompute."""
+    return df.withColumn("cents", F.floor(F.col("value") * 100 + 0.5))
+
+
+def _ntz_buckets(out: DataFrame) -> DataFrame:
+    """window_counts' bucket back to the fixture's NTZ, as bucket_start."""
+    return out.withColumn(
+        "bucket", F.col("bucket").cast("timestamp_ntz")
+    ).withColumnRenamed("bucket", "bucket_start")
+
+
 @query(
     "q_stream_continuous_agg",
     oracle="""
@@ -144,34 +181,17 @@ def q_stream_continuous_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: streaming state is one row per (open window × event
     type) — bounded by the watermark horizon, not by stream length; each
     micro-batch does a map-side partial agg before the state-store merge
-    (same shuffle discipline as the batch groupBy). The memory sink +
-    complete mode here are the comparison harness (the final table must
-    be readable back); the production posture is update mode into a
-    keyed sink with the watermark evicting closed windows, exercised in
-    tests/test_streaming.py. The checkpoint is fresh per invocation
-    because the landing data is rewritten per invocation — checkpoint
-    resume/exactly-once across restarts is pytest-covered
+    (same shuffle discipline as the batch groupBy). The body is
+    streaming/ops.window_counts, the builder q_win_tumbling_batch runs
+    in batch mode and run_continuous_rollup maintains as a sink. The
+    memory sink + complete mode here are the comparison harness (the
+    final table must be readable back). The checkpoint is fresh per
+    invocation because the landing data is rewritten per invocation —
+    checkpoint resume/exactly-once across restarts is pytest-covered
     (s_ingest_e2e's kill-a-commit test)."""
     landing, schema = _land_events(spark, sf_dir, "q_stream_continuous_agg")
-    # Watermarks require TIMESTAMP (event-time) — the fixture column is
-    # TIMESTAMP_NTZ; under the UTC session the cast is wall-clock
-    # preserving, and the window bound is cast back to NTZ on output.
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sv"))
-    )
-    out = _run_to_table(spark, stream, "q_stream_continuous_agg")
-    return out.select(
-        F.col("w.start").cast("timestamp_ntz").alias("bucket_start"),
-        "event_type",
-        "n_events",
-        F.round("sv", 2).alias("sum_value"),
-    )
+    stream = window_counts(_stream(spark, landing, schema), watermark="1 hour")
+    return _ntz_buckets(_run_to_table(spark, stream, "q_stream_continuous_agg"))
 
 
 @query(
@@ -240,20 +260,21 @@ def q_stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streamed exactly-once ingest gate: every event is landed TWICE, in
     two DIFFERENT micro-batches (copy A in files 0..N-1, copy B in files
     N..2N-1 — maxFilesPerTrigger=1 guarantees the duplicate never shares
-    a batch with its original), and streaming dropDuplicates on event_id
-    must emit each event exactly once. The final table hash-matches the
+    a batch with its original), and dropDuplicatesWithinWatermark on
+    event_id must emit each event exactly once. The final table hash-matches the
     plain events table — the at-least-once-delivery-to-exactly-once-
     ingest contract (§2A A7's replay-idempotence, here under the
     driver's DuckDB hash gate rather than pytest).
 
     Copies are byte-identical, so which arrival wins is immaterial and
     the output is deterministic under any batch interleaving. Scale
-    shape: dedup state is one key per distinct event_id; the PRODUCTION
-    posture is dropDuplicatesWithinWatermark (state bounded by the
-    watermark horizon, exercised in tests/test_streaming.py) — unbounded
-    dropDuplicates here is the comparison harness over a finite landing.
-    Append mode: each row is emitted by the micro-batch that first sees
-    it, so the sink union IS the deduplicated stream."""
+    shape: dedup state is one key per distinct event_id, bounded by the
+    watermark horizon — the production operator,
+    streaming/ops.dedup_within_watermark. The watermark here outlasts
+    the fixture's time span, so no copy B arrives after its event's
+    state expired (the q_stream_join_interval precedent). Append mode:
+    each row is emitted by the micro-batch that first sees it, so the
+    sink union IS the deduplicated stream."""
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -270,13 +291,11 @@ def q_stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(landing, name),
             os.path.join(landing, f"part-dup-{i:05d}-copy.parquet"),
         )
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .dropDuplicates(["event_id"])
+    stream = dedup_within_watermark(
+        _stream(spark, landing, e.schema), watermark="3650 days"
     )
-    return _run_to_table(spark, stream, "q_stream_dedup_exact", mode="append")
+    out = _run_to_table(spark, stream, "q_stream_dedup_exact", mode="append")
+    return out.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
 
 
 @query(
@@ -316,28 +335,22 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessionization (native ≥-gap split semantics, the boundary contract
     q_win_session_native pins for batch).
 
-    Scale shape: state is one row per OPEN session per user — in
-    production bounded by the watermark horizon (pytest covers eviction);
-    complete mode here is the comparison harness. Session starts/ends
-    are input timestamps (selection ± the constant gap, formatted, not
-    float arithmetic) and counts are exact."""
+    Scale shape: state is one row per OPEN session per user; in append
+    or update mode the watermark evicts closed sessions. The body is
+    streaming/ops.session_counts, the builder q_win_session_native runs
+    in batch mode; its watermark here outlasts the fixture's time span,
+    so no chunk's rows count as late (the q_stream_join_interval
+    precedent). Complete mode is the comparison harness. Session
+    starts/ends are input timestamps (selection ± the constant gap,
+    formatted, not float arithmetic) and counts are exact."""
     landing, schema = _land_events(spark, sf_dir, "q_stream_sessionize")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
+    stream = session_counts(_stream(spark, landing, schema), watermark="3650 days")
     out = _run_to_table(spark, stream, "q_stream_sessionize")
     return out.select(
         "user_id",
-        F.date_format("w.start", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
-            "session_start"
-        ),
-        F.date_format("w.end", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
-            "session_end"
+        *(
+            F.date_format(c, "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(c)
+            for c in ("session_start", "session_end")
         ),
         "n_events",
     )
@@ -378,26 +391,15 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_custkey", "c_mktsegment"
         )
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withColumn("cents", F.floor(F.col("value") * 100 + 0.5))
-        .join(dim, F.col("user_id") == F.col("c_custkey"))
-        .withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 day").alias("w"), "c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("cents").alias("sum_cents"),
-        )
+    joined = _with_cents(_stream(spark, landing, schema)).join(
+        dim, F.col("user_id") == F.col("c_custkey")
     )
-    out = _run_to_table(spark, stream, "q_stream_static_join")
+    stream = window_counts(
+        joined, "1 day", by=("c_mktsegment",), sum_col="cents", watermark="1 hour"
+    )
+    out = _ntz_buckets(_run_to_table(spark, stream, "q_stream_static_join"))
     return out.select(
-        F.col("c_mktsegment").alias("segment"),
-        F.col("w.start").cast("timestamp_ntz").alias("bucket_start"),
-        "n_events",
-        "sum_cents",
+        F.col("c_mktsegment").alias("segment"), "bucket_start", "n_events", "sum_cents"
     )
 
 
@@ -431,26 +433,14 @@ def q_stream_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials per batch. Sums are exact integer cents (order-insensitive
     across batch boundaries)."""
     landing, schema = _land_events(spark, sf_dir, "q_stream_sliding_agg")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withColumn("cents", F.floor(F.col("value") * 100 + 0.5))
-        .withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("cents").alias("sum_cents"),
-        )
+    stream = window_counts(
+        _with_cents(_stream(spark, landing, schema)),
+        "2 hours",
+        "1 hour",
+        sum_col="cents",
+        watermark="1 hour",
     )
-    out = _run_to_table(spark, stream, "q_stream_sliding_agg")
-    return out.select(
-        F.col("w.start").cast("timestamp_ntz").alias("bucket_start"),
-        "event_type",
-        "n_events",
-        "sum_cents",
-    )
+    return _ntz_buckets(_run_to_table(spark, stream, "q_stream_sliding_agg"))
 
 
 LATE_DELAY_HOURS = 2     # watermark delay for the late-drop gate
@@ -536,24 +526,13 @@ def q_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.copyfile(src, dst)
         shutil.rmtree(tmp, ignore_errors=True)  # scratch copied out — reap now
         os.utime(dst, (1_000_000 + k * 100, 1_000_000 + k * 100))
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", LATE_DELAY)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.floor(F.col("value") * 100 + 0.5)).alias("sum_cents"),
-        )
+    stream = window_counts(
+        _with_cents(_stream(spark, landing, e.schema)),
+        sum_col="cents",
+        watermark=LATE_DELAY,
     )
-    out = _run_to_table(spark, stream, "q_stream_late_drop", mode="append")
-    return out.select(
-        F.col("w.start").cast("timestamp_ntz").alias("bucket_start"),
-        "event_type",
-        "n_events",
-        "sum_cents",
+    return _ntz_buckets(
+        _run_to_table(spark, stream, "q_stream_late_drop", mode="append")
     )
 
 
@@ -643,66 +622,6 @@ def q_stream_join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _accumulate_cents(n: int, cents: int, batches) -> tuple[int, int]:
-    """The ONE accumulation body behind both stateful-counter API paths
-    (applyInPandasWithState and transformWithState must stay
-    bit-identical for the downgrade to be semantics-preserving). Cents
-    via floor(value*100 + 0.5) — the repo's float-free streaming-sum
-    discipline (see q_stream_late_drop), so cross-batch accumulation
-    order can't drift the hash. NULL values are skipped from the sum
-    but counted in n — exactly the oracle's sum()/count(*) semantics
-    (int(NaN) would otherwise crash the query)."""
-    import numpy as np
-
-    for pdf in batches:
-        n += len(pdf)
-        v = pdf["value"].to_numpy(dtype="float64")
-        v = v[~np.isnan(v)]
-        cents += int(np.floor(v * 100 + 0.5).sum())
-    return n, cents
-
-
-def _cents_counter_fn(key, batches, state):
-    """applyInPandasWithState body for q_stream_stateful_counters."""
-    import pandas as pd
-
-    n, cents = state.get if state.exists else (0, 0)
-    n, cents = _accumulate_cents(n, cents, batches)
-    state.update((n, cents))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n], "sum_cents": [cents]}
-    )
-
-
-_CENTS_OUT_DDL = "user_id long, n_events long, sum_cents long"
-_CENTS_STATE_DDL = "n long, cents long"
-
-
-class _CentsStatefulProcessor:
-    """transformWithState processor with the same semantics as
-    _cents_counter_fn, instantiated ONLY where the runtime supports it
-    (see q_stream_stateful_counters). Defined lazily as a plain class so
-    importing this module never touches the TWS runner's protobuf
-    dependency."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("counter", _CENTS_STATE_DDL)
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd
-
-        got = self._state.get()
-        n, cents = got if got is not None else (0, 0)
-        n, cents = _accumulate_cents(n, cents, rows)
-        self._state.update((n, cents))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "sum_cents": [cents]}
-        )
-
-    def close(self) -> None:
-        pass
-
-
 @query(
     "q_stream_stateful_counters",
     oracle="""
@@ -720,13 +639,13 @@ def q_stream_stateful_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     gated state shape (custom value-state, complementing the windowed /
     session / upsert / seen-key / join-buffer shapes above).
 
-    API selection IS the probe (SURVEY.md §7 R6, r6 verdict item 7):
-    Spark 4's transformWithStateInPandas is preferred when the runtime
+    The body is streaming/ops.stateful_user_counters, whose API
+    selection IS the probe (SURVEY.md §7 R6, r6 verdict item 7): Spark
+    4's transformWithStateInPandas is preferred when the runtime
     supports it, but its runner imports google.protobuf, which this
-    container lacks — transform_with_state_available() detects that at
-    runtime and the operator auto-downgrades to applyInPandasWithState
-    with IDENTICAL semantics (same state row, same emissions), so the
-    registry itself documents the limitation instead of only SURVEY.md.
+    container lacks — so the operator auto-downgrades to
+    applyInPandasWithState with IDENTICAL semantics (same state row,
+    same emissions).
 
     Update mode emits the running counter each time a batch touches a
     user; the FINAL counter per user is selected by max n_events (the
@@ -736,45 +655,11 @@ def q_stream_stateful_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge; the update stream into the sink is the CDC-style changelog a
     production deployment would upsert, here unioned in memory as the
     comparison harness."""
-    from kafka_hadoop_consumer_spark.streaming.ops import (
-        transform_with_state_available,
-    )
-
     landing, schema = _land_events(spark, sf_dir, "q_stream_stateful_counters")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .select("user_id", "value")
-    )
-    if transform_with_state_available():  # pragma: no cover — protobuf
-        # absent in this container; path exercised on full deployments
-        from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-        proc = type(
-            "CentsProcessor", (_CentsStatefulProcessor, StatefulProcessor), {}
-        )()
-        counters = stream.groupBy("user_id").transformWithStateInPandas(
-            proc,
-            outputStructType=_CENTS_OUT_DDL,
-            outputMode="Update",
-            timeMode="None",
-        )
-    else:
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        counters = stream.groupBy("user_id").applyInPandasWithState(
-            _cents_counter_fn,
-            outputStructType=_CENTS_OUT_DDL,
-            stateStructType=_CENTS_STATE_DDL,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    counters = stateful_user_counters(_stream(spark, landing, schema))
     out = _run_to_table(
         spark, counters, "q_stream_stateful_counters", mode="update"
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
         out.withColumn("rn", F.row_number().over(w))

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from kafka_hadoop_consumer_spark.catalog import load_table
 from kafka_hadoop_consumer_spark.queries.registry import persist_tracked, query
+from kafka_hadoop_consumer_spark.streaming.ops import window_counts
 
 
 @query(
@@ -77,21 +78,11 @@ def q_dedup_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_win_tumbling_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour window aggregate (batch analogue of s_stream_tumbling;
-    F.window is the same operator Structured Streaming uses)."""
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("bucket"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
+    """Tumbling 1-hour window aggregate: streaming/ops.window_counts, the
+    builder q_stream_continuous_agg runs over a stream, here over the
+    plain table (its watermark is a no-op on a batch frame)."""
+    return window_counts(load_table(spark, sf_dir, "events")).withColumn(
+        "bucket", F.date_format("bucket", "yyyy-MM-dd HH:mm:ss")
     )
 
 

@@ -23,6 +23,7 @@ from kafka_hadoop_consumer_spark.queries.registry import (
     persist_tracked,
     query,
 )
+from kafka_hadoop_consumer_spark.streaming.ops import session_counts
 
 
 @query(
@@ -555,9 +556,6 @@ def q_win_time_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SESSION_GAP = "30 minutes"  # native session_window gap (q_win_sessionize's 30 min)
-
-
 @query(
     "q_win_session_native",
     oracle="""
@@ -595,21 +593,17 @@ def q_win_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary difference between the idioms).
 
     Scale shape: one shuffle on user_id; session merging is a sort
-    within each key partition — the same plan the streaming
-    session_window test executes incrementally with state. Session
-    start is an input timestamp (selection, formatted, not arithmetic)
-    and event counts are exact."""
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy("user_id", F.session_window("ts", SESSION_GAP).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
-                "session_start"
-            ),
-            "n_events",
-        )
+    within each key partition. The body is streaming/ops.session_counts,
+    the builder q_stream_sessionize executes incrementally with state
+    (its watermark is a no-op on a batch frame). Session start is an
+    input timestamp (selection, formatted, not arithmetic) and event
+    counts are exact."""
+    return session_counts(load_table(spark, sf_dir, "events")).select(
+        "user_id",
+        F.date_format("session_start", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
+            "session_start"
+        ),
+        "n_events",
     )
 
 

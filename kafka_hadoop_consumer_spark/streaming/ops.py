@@ -1,13 +1,25 @@
 """Streaming operator surface (SURVEY.md §2B "Streaming-only operators"):
-windowed aggregations, watermarks, dedup, joins, arbitrary state.
+windowed aggregations, watermarks, dedup, arbitrary state, and the
+foreachBatch snapshot sinks.
 
-Each builder takes an (unbounded) events-shaped DataFrame —
-``event_id long, ts timestamp, user_id long, event_type string,
-value double`` — and returns the transformed streaming DataFrame; the
-same builders work on batch DataFrames (one engine, two modes, SURVEY.md
-§1.3). Verified in tests/test_streaming.py by replaying fixture data
-through file sources into memory sinks and comparing against the batch
-analogue.
+Each builder takes an events-shaped DataFrame — ``event_id long, ts
+timestamp, user_id long, event_type string, value double`` — and returns
+the transformed DataFrame, streaming or batch alike (one engine, two
+modes, SURVEY.md §1.3). The registry keys are the builders' callers, each
+hash-checked against a DuckDB oracle:
+
+- window_counts: q_stream_continuous_agg, q_stream_sliding_agg,
+  q_stream_static_join, q_stream_late_drop and, in batch mode,
+  q_win_tumbling_batch (run_continuous_rollup maintains it as a sink);
+- session_counts: q_stream_sessionize and, in batch mode,
+  q_win_session_native;
+- dedup_within_watermark: q_stream_dedup_exact;
+- stateful_user_counters: q_stream_stateful_counters.
+
+tests/test_properties.py checks that a stream over any micro-batch split
+gives the batch answer; the foreachBatch sinks (run_foreach_batch_upsert,
+run_continuous_rollup, run_incremental_near_dedup) and their crash-safety
+are covered in tests/test_streaming.py.
 """
 
 from __future__ import annotations
@@ -25,43 +37,38 @@ from pyspark.sql import functions as F
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
-def tumbling_counts(df: DataFrame, window: str = "1 hour",
-                    watermark: str = "10 minutes") -> DataFrame:
-    """s_stream_tumbling: per-(window, event_type) counts/sums with a
-    watermark so state for closed windows is dropped (bounded state at
-    100 TB/day stream rates)."""
+SESSION_GAP = "30 minutes"  # native session_window gap (q_win_sessionize's 30 min)
+
+
+def window_counts(df: DataFrame, window: str = "1 hour", slide: str | None = None,
+                  by: tuple[str, ...] = ("event_type",), sum_col: str = "value",
+                  watermark: str = "10 minutes") -> DataFrame:
+    """Per-(window, *by) event count and ``sum_<sum_col>``, rounded to 2
+    places (the identity on an integer-cents column). ``slide`` makes
+    the windows overlap: each event lands in window/slide buckets. On a
+    stream in append or update mode the watermark evicts closed windows'
+    state (bounded state at 100 TB/day rates) and drops rows that arrive
+    after their window closed; complete mode keeps every window, and on
+    a batch frame the watermark is a no-op."""
+    total = f"sum_{sum_col}"
     return (
         df.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        .groupBy(F.window("ts", window, slide).alias("w"), *by)
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
+            F.round(F.sum(sum_col), 2).alias(total),
         )
-        .select(
-            F.col("w.start").alias("bucket"), "event_type", "n_events", "sum_value"
-        )
+        .select(F.col("w.start").alias("bucket"), *by, "n_events", total)
     )
 
 
-def sliding_counts(df: DataFrame, window: str = "1 hour", slide: str = "30 minutes",
-                   watermark: str = "10 minutes") -> DataFrame:
-    """s_stream_sliding: overlapping windows — each event lands in
-    window/slide buckets."""
+def session_counts(df: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+    """Gap-based session windows per user (dynamic-width state, merged
+    as events arrive). A gap of exactly SESSION_GAP starts a new
+    session."""
     return (
         df.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("bucket"), "n_events")
-    )
-
-
-def session_counts(df: DataFrame, gap: str = "30 minutes",
-                   watermark: str = "10 minutes") -> DataFrame:
-    """s_stream_session: gap-based session windows per user (dynamic-width
-    state, merged as events arrive)."""
-    return (
-        df.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        .groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("w.start").alias("session_start"),
@@ -72,57 +79,13 @@ def session_counts(df: DataFrame, gap: str = "30 minutes",
     )
 
 
-def dedup_within_watermark(df: DataFrame, keys: list[str] | None = None,
-                           watermark: str = "1 hour") -> DataFrame:
-    """s_stream_dedup: drop duplicate event_ids arriving within the
-    watermark horizon — state is bounded by the watermark, unlike a plain
-    dropDuplicates on a stream which grows forever."""
-    keys = keys or ["event_id"]
-    out = df.withWatermark("ts", watermark)
-    if hasattr(out, "dropDuplicatesWithinWatermark"):
-        return out.dropDuplicatesWithinWatermark(keys)
-    # Spark <3.5 fallback: plain dropDuplicates on the SAME keys keeps
-    # the contract (a redelivered event_id with a re-stamped ts is still
-    # dropped — keying on (keys + ts) would let it through), at the cost
-    # of state that the watermark cannot evict. Loud, not silent:
-    import warnings
-
-    warnings.warn(
-        "dropDuplicatesWithinWatermark unavailable (<Spark 3.5): falling "
-        "back to unbounded-state dropDuplicates on the same keys",
-        RuntimeWarning,
-        stacklevel=2,
+def dedup_within_watermark(df: DataFrame, watermark: str = "1 hour") -> DataFrame:
+    """Drop duplicate event_ids arriving within the watermark horizon —
+    state is bounded by the watermark, unlike a plain dropDuplicates on
+    a stream, which grows forever."""
+    return df.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+        ["event_id"]
     )
-    return out.dropDuplicates(keys)
-
-
-def enrich_with_dim(stream: DataFrame, dim: DataFrame, on: str = "user_id") -> DataFrame:
-    """s_stream_join (stream-static): per-microbatch broadcast-able join
-    against a static dimension — no streaming state at all."""
-    return stream.join(F.broadcast(dim), on, "left")
-
-
-def stream_stream_funnel(views: DataFrame, purchases: DataFrame,
-                         horizon: str = "1 hour",
-                         watermark: str = "2 hours") -> DataFrame:
-    """s_stream_join (stream-stream): purchase within `horizon` after a
-    view, same user — both sides watermarked so join state expires."""
-    v = views.select(
-        F.col("event_id").alias("view_id"),
-        F.col("user_id"),
-        F.col("ts").alias("v_ts"),
-    ).withWatermark("v_ts", watermark)
-    p = purchases.select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user_id"),
-        F.col("ts").alias("p_ts"),
-    ).withWatermark("p_ts", watermark)
-    return v.join(
-        p,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("p_ts") > F.col("v_ts"))
-        & (F.col("p_ts") <= F.col("v_ts") + F.expr(f"INTERVAL {horizon}")),
-    ).select("view_id", "purchase_id", "user_id")
 
 
 def _read_snapshot(spark, out_path: str) -> DataFrame:
@@ -225,44 +188,69 @@ def run_foreach_batch_upsert(
     q.awaitTermination()
 
 
-_COUNTER_SCHEMA = "user_id long, n_events long, total_value double"
-_STATE_SCHEMA = "n long, total double"
+_COUNTER_OUT_DDL = "user_id long, n_events long, sum_cents long"
+_COUNTER_STATE_DDL = "n long, cents long"
 
 
-def _counter_fn(key: tuple, batches: Iterator[pd.DataFrame], state: Any) -> Iterator[pd.DataFrame]:
-    """applyInPandasWithState body: running per-user counters across
-    micro-batches (the arbitrary-stateful pattern: sessionization,
-    counters, custom CDC)."""
-    n, total = state.get if state.exists else (0, 0.0)  # .get is a property
+def _accumulate_cents(n: int, cents: int, batches) -> tuple[int, int]:
+    """The ONE accumulation body behind every stateful-counter path (no
+    timeout, TTL, transformWithState — they must stay bit-identical for
+    the downgrade to be semantics-preserving). Cents via
+    floor(value*100 + 0.5) — the repo's float-free streaming-sum
+    discipline, so cross-batch accumulation order can't drift the hash.
+    NULL values are skipped from the sum but counted in n — exactly SQL's
+    sum()/count(*) semantics (int(NaN) would otherwise crash the query)."""
+    import numpy as np
+
     for pdf in batches:
         n += len(pdf)
-        total += float(pdf["value"].sum())
-    state.update((n, total))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 2)]}
-    )
+        v = pdf["value"].to_numpy(dtype="float64")
+        v = v[~np.isnan(v)]
+        cents += int(np.floor(v * 100 + 0.5).sum())
+    return n, cents
 
 
-def _make_ttl_counter_fn(ttl_ms: int):
-    """Counter body with idle-key eviction: keys quiet for ttl_ms have
-    their state removed (bounding the state store by ACTIVE keys instead
-    of all keys ever seen)."""
+def _counter_row(key: tuple, n: int, cents: int) -> pd.DataFrame:
+    return pd.DataFrame({"user_id": [key[0]], "n_events": [n], "sum_cents": [cents]})
+
+
+def _make_counter_fn(ttl_ms: int | None):
+    """applyInPandasWithState body. With ``ttl_ms``, keys quiet for that
+    long have their state removed (bounding the state store by ACTIVE
+    keys instead of all keys ever seen)."""
 
     def fn(key: tuple, batches: Iterator[pd.DataFrame], state: Any) -> Iterator[pd.DataFrame]:
         if state.hasTimedOut:
             state.remove()
             return
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in batches:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        state.setTimeoutDuration(ttl_ms)
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 2)]}
-        )
+        n, cents = state.get if state.exists else (0, 0)  # .get is a property
+        n, cents = _accumulate_cents(n, cents, batches)
+        state.update((n, cents))
+        if ttl_ms is not None:
+            state.setTimeoutDuration(ttl_ms)
+        yield _counter_row(key, n, cents)
 
     return fn
+
+
+class _CentsStatefulProcessor:
+    """transformWithState processor with the same semantics as the
+    applyInPandasWithState body, mixed into StatefulProcessor ONLY where
+    the runtime supports it (see stateful_user_counters). A plain class,
+    so importing this module never touches the TWS runner's protobuf
+    dependency."""
+
+    def init(self, handle) -> None:
+        self._state = handle.getValueState("counter", _COUNTER_STATE_DDL)
+
+    def handleInputRows(self, key, rows, timerValues):
+        got = self._state.get()
+        n, cents = _accumulate_cents(*(got if got is not None else (0, 0)), rows)
+        self._state.update((n, cents))
+        yield _counter_row(key, n, cents)
+
+    def close(self) -> None:
+        pass
 
 
 def transform_with_state_available() -> bool:
@@ -282,18 +270,22 @@ def transform_with_state_available() -> bool:
 
 
 def stateful_user_counters(df: DataFrame, ttl_minutes: int | None = None) -> DataFrame:
-    """s_stream_stateful: arbitrary per-key state via applyInPandasWithState.
+    """Arbitrary per-key state: a running per-user (n_events, sum_cents)
+    counter, emitted in update mode each micro-batch that touches the
+    user; state lives in the checkpointed state store (the analogue of
+    the reference's ZK offsets — but holding operator state, SURVEY.md
+    §3.2).
 
-    Emits the updated (user_id, n_events, total_value) each micro-batch;
-    state lives in the checkpointed state store (the analogue of the
-    reference's ZK offsets — but holding operator state, SURVEY.md §3.2).
+    API selection IS the probe (SURVEY.md §7 R6): transformWithState is
+    preferred where transform_with_state_available() says the runtime
+    supports it, otherwise the counter auto-downgrades to
+    applyInPandasWithState with identical semantics.
 
     ``ttl_minutes`` bounds the state store for always-on deployments:
     keys idle longer than the TTL are evicted (processing-time timeout),
-    so state scales with ACTIVE keys, not with every user_id ever seen —
-    without it, an unbounded-cardinality key column grows the state
-    store and checkpoint forever. ``None`` (bounded replay harnesses,
-    tests) keeps counters exact over the whole run.
+    so state scales with ACTIVE keys, not with every user_id ever seen.
+    ``None`` (bounded replay harnesses, tests) keeps counters exact over
+    the whole run.
 
     Operational caveat (measured on PySpark 4.1.2): with a processing-
     time timeout configured, ``trigger(availableNow=True)`` does NOT
@@ -302,35 +294,35 @@ def stateful_user_counters(df: DataFrame, ttl_minutes: int | None = None) -> Dat
     with the default trigger plus ``processAllAvailable()``/``stop()``
     in bounded harnesses; reserve availableNow for ``ttl_minutes=None``.
     """
+    grouped = df.select("user_id", "value").groupBy("user_id")
+    if ttl_minutes is None and transform_with_state_available():  # pragma: no cover
+        from pyspark.sql.streaming.stateful_processor import StatefulProcessor
+
+        proc = type("CentsProcessor", (_CentsStatefulProcessor, StatefulProcessor), {})
+        return grouped.transformWithStateInPandas(
+            proc(),
+            outputStructType=_COUNTER_OUT_DDL,
+            outputMode="Update",
+            timeMode="None",
+        )
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    if ttl_minutes is None:
-        fn, conf = _counter_fn, GroupStateTimeout.NoTimeout
-    else:
-        fn = _make_ttl_counter_fn(ttl_minutes * 60_000)
-        conf = GroupStateTimeout.ProcessingTimeTimeout
-    return (
-        df.select("user_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=_COUNTER_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=conf,
-        )
+    return grouped.applyInPandasWithState(
+        _make_counter_fn(None if ttl_minutes is None else ttl_minutes * 60_000),
+        outputStructType=_COUNTER_OUT_DDL,
+        stateStructType=_COUNTER_STATE_DDL,
+        outputMode="update",
+        timeoutConf=(
+            GroupStateTimeout.NoTimeout
+            if ttl_minutes is None
+            else GroupStateTimeout.ProcessingTimeTimeout
+        ),
     )
 
 
-def run_continuous_rollup(
-    df: DataFrame,
-    out_path: str,
-    checkpoint: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> None:
+def run_continuous_rollup(df: DataFrame, out_path: str, checkpoint: str) -> None:
     """Continuous aggregate (the hypertable materialized-rollup pattern):
-    maintain a per-(window, event_type) rollup table that stays correct as
+    maintain a per-(hour, event_type) rollup table that stays correct as
     new micro-batches arrive and across restarts.
 
     Spark-first shape: the aggregation itself lives in the STREAM (state
@@ -342,17 +334,8 @@ def run_continuous_rollup(
     partition-overwrite (or MERGE on a table format); the stream side
     already only ships changed buckets.
     """
-    rolled = (
-        df.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("bucket"), "event_type",
-            "n_events", "total_value",
-        )
+    rolled = window_counts(df, watermark="2 hours").withColumnRenamed(
+        "sum_value", "total_value"
     )
 
     def replace_buckets(batch: DataFrame, batch_id: int) -> None:

@@ -14,6 +14,20 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+
+def _half_host_mem() -> str:
+    """Half of MemTotal as a JVM size: the whole suite runs in one
+    local-mode JVM, and session.py's 16g default can exceed the host."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    return f"{kb // 2 // 1024}m"
+
+
+# Must precede the package import: session.py reads it at import time.
+# An explicitly set SPARK_GRAFT_DRIVER_MEM still wins.
+if os.path.exists("/proc/meminfo"):
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _half_host_mem())
+
 from kafka_hadoop_consumer_spark import TABLES, get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")

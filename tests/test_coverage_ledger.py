@@ -519,6 +519,34 @@ def test_real_registry_closure_sees_shared_helpers():
     assert any(q.endswith("ngram_expr") for q in closure), closure
 
 
+def test_stream_keys_close_over_their_ops_builder():
+    # Each key that runs a streaming/ops.py builder must carry it in its
+    # def-hash closure, so a builder edit marks the key STALE. The
+    # builders are imported at module level for this: helper_closure
+    # reads a function-local import as a local binding and skips it.
+    from kafka_hadoop_consumer_spark.queries import QUERIES
+
+    calls = {
+        "q_stream_continuous_agg": ["window_counts"],
+        "q_stream_sliding_agg": ["window_counts"],
+        "q_stream_static_join": ["window_counts"],
+        "q_stream_late_drop": ["window_counts"],
+        "q_win_tumbling_batch": ["window_counts"],
+        "q_stream_sessionize": ["session_counts"],
+        "q_win_session_native": ["session_counts"],
+        "q_stream_dedup_exact": ["dedup_within_watermark"],
+        "q_stream_stateful_counters": [
+            "stateful_user_counters", "transform_with_state_available",
+        ],
+    }
+    for key, builders in calls.items():
+        closure = ledger.helper_closure(QUERIES[key])
+        for b in builders:
+            assert f"kafka_hadoop_consumer_spark.streaming.ops.{b}" in closure, (
+                key, b,
+            )
+
+
 def test_def_hash_stable_across_interpreters():
     # The closure walk iterates AST-collected name SETS; without
     # sorted() the visit order — and thus which const wins a name

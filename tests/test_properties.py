@@ -8,10 +8,13 @@ These catch semantics drift the fixture-based oracle tests can't reach
 
 from __future__ import annotations
 
+import itertools
+from collections import Counter
+
 import duckdb
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -651,3 +654,82 @@ def test_asof_join_matches_pure_python(spark, left, right, direction, tolerance,
     )
     got = {r.lid: r.rid for r in out.collect()}
     assert got == expected
+
+
+_SPLIT_RUNS = itertools.count()
+
+
+@settings(
+    max_examples=3,
+    deadline=None,
+    suppress_health_check=[
+        HealthCheck.function_scoped_fixture,
+        HealthCheck.too_slow,
+    ],
+)
+@given(
+    cuts=st.lists(
+        st.integers(min_value=1, max_value=999), max_size=4, unique=True
+    ),
+    seed=st.integers(min_value=0, max_value=2**31 - 1),
+    per_trigger=st.integers(min_value=1, max_value=5),
+)
+@example(cuts=[250, 500, 750], seed=0, per_trigger=2)
+@example(cuts=[200, 400, 600, 800], seed=1, per_trigger=1)
+def test_stream_matches_batch_over_any_split(
+    spark, tmp_path, cuts, seed, per_trigger
+):
+    """Prefix consistency, Structured Streaming's core claim: the events
+    land as 1-5 parquet chunks (a seeded shuffle cut at the drawn
+    boundaries, so every user's events arrive out of time order) and are
+    read maxFilesPerTrigger=per_trigger at a time. window_counts and
+    session_counts over that stream must give exactly the rows they give
+    over the batch frame. Sums are integer cents, so equality is exact;
+    the watermark outlasts the fixture's time span, so no row is late.
+    Spark filters late rows by the watermark of two batches back, so
+    only a run of 3+ micro-batches can drop any: the second example
+    (5 chunks, one per trigger) is the one that catches a session
+    watermark shorter than the data's disorder. (A complete-mode window
+    aggregate keeps late rows whatever its watermark.)"""
+    from kafka_hadoop_consumer_spark.catalog import load_table
+    from kafka_hadoop_consumer_spark.streaming.ops import (
+        session_counts,
+        window_counts,
+    )
+    from tests.conftest import SF_SMALL
+
+    events = load_table(spark, SF_SMALL, "events").select(
+        "event_id",
+        F.col("ts").cast("timestamp").alias("ts"),
+        "user_id",
+        "event_type",
+        F.floor(F.col("value") * 100 + 0.5).alias("cents"),
+    )
+    run = next(_SPLIT_RUNS)
+    landing = str(tmp_path / f"landing{run}")
+    rank = F.pmod(F.xxhash64("event_id", F.lit(seed)), F.lit(1000))
+    bounds = [0, *sorted(cuts), 1000]
+    for lo, hi in zip(bounds, bounds[1:]):
+        events.where((rank >= lo) & (rank < hi)).coalesce(1).write.mode(
+            "append"
+        ).parquet(landing)
+    stream = (
+        spark.readStream.schema(events.schema)
+        .option("maxFilesPerTrigger", per_trigger)
+        .parquet(landing)
+    )
+    builders = {
+        "windows": lambda df: window_counts(
+            df, sum_col="cents", watermark="3650 days"
+        ),
+        "sessions": lambda df: session_counts(df, watermark="3650 days"),
+    }
+    for shape, build in builders.items():
+        name = f"split_{shape}_{run}"
+        q = (
+            build(stream).writeStream.format("memory").queryName(name)
+            .outputMode("complete").trigger(availableNow=True).start()
+        )
+        q.awaitTermination()
+        got = Counter(spark.table(name).collect())
+        assert got == Counter(build(events).collect()), (shape, cuts, seed)

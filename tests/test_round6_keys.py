@@ -11,97 +11,6 @@ from kafka_hadoop_consumer_spark.queries import QUERIES
 from tests.conftest import SF_DIR
 
 
-def test_continuous_agg_spans_multiple_microbatches(spark):
-    """The streaming run must actually be incremental: several
-    micro-batches (maxFilesPerTrigger=1 over the multi-file landing),
-    each contributing rows, with the windowed state carried between
-    them — one big batch would make the equivalence claim vacuous."""
-    from kafka_hadoop_consumer_spark.queries import continuous
-
-    out = QUERIES["q_stream_continuous_agg"](spark, SF_DIR)
-    # result equals the batch recompute over the SAME landing files
-    landing = continuous.LAST_LANDING["q_stream_continuous_agg"]
-    batch = (
-        spark.read.parquet(landing)
-        .groupBy(
-            F.date_trunc("hour", "ts").alias("bucket_start"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-    )
-    assert out.exceptAll(batch).count() == 0
-    assert batch.exceptAll(out).count() == 0
-    n_batches = continuous.LAST_BATCHES.get("q_stream_continuous_agg")
-    assert n_batches is not None and n_batches >= 2, (
-        f"expected multiple data micro-batches, got {n_batches}"
-    )
-
-
-def test_cdc_upsert_streams_multiple_batches_and_matches_batch_lww(spark):
-    from kafka_hadoop_consumer_spark.catalog import load_table
-    from kafka_hadoop_consumer_spark.queries import continuous
-
-    out = QUERIES["q_stream_cdc_upsert"](spark, SF_DIR).cache()
-    try:
-        assert continuous.LAST_BATCHES["q_stream_cdc_upsert"] >= 2
-        e = load_table(spark, SF_DIR, "events")
-        # one state row per entity; change counts conserve the stream
-        assert out.count() == e.select("user_id").distinct().count()
-        n = out.agg(F.sum("n_changes")).collect()[0][0]
-        assert n == e.count()
-        # the winner really is each user's max-(ts, event_id) event
-        w = e.groupBy("user_id").agg(
-            F.max(F.struct("ts", "event_id")).alias("m")
-        )
-        bad = out.join(w, "user_id").where(F.col("last_ts") != F.col("m.ts"))
-        assert bad.count() == 0
-    finally:
-        out.unpersist()
-
-
-def test_sessionize_streams_multiple_batches_and_partitions_events(spark):
-    from kafka_hadoop_consumer_spark.catalog import load_table
-    from kafka_hadoop_consumer_spark.queries import continuous
-
-    out = QUERIES["q_stream_sessionize"](spark, SF_DIR).cache()
-    try:
-        assert continuous.LAST_BATCHES["q_stream_sessionize"] >= 2
-        e = load_table(spark, SF_DIR, "events")
-        # sessions partition the event stream (merges lose nothing)
-        assert out.agg(F.sum("n_events")).collect()[0][0] == e.count()
-        # streamed session merging == batch native session_window
-        batch = QUERIES["q_win_session_native"](spark, SF_DIR).select(
-            "user_id", "session_start", "n_events"
-        )
-        got = out.select("user_id", "session_start", "n_events")
-        assert got.exceptAll(batch).count() == 0
-        assert batch.exceptAll(got).count() == 0
-    finally:
-        out.unpersist()
-
-
-def test_stream_dedup_lands_each_event_twice_and_emits_once(spark):
-    from kafka_hadoop_consumer_spark.catalog import load_table
-    from kafka_hadoop_consumer_spark.queries import continuous
-
-    out = QUERIES["q_stream_dedup_exact"](spark, SF_DIR).cache()
-    try:
-        n = load_table(spark, SF_DIR, "events").count()
-        # the landing really contains every event twice...
-        landing = continuous.LAST_LANDING["q_stream_dedup_exact"]
-        landed = spark.read.parquet(landing)
-        assert landed.count() == 2 * n
-        # ...across multiple micro-batches, and exactly once survives
-        assert continuous.LAST_BATCHES["q_stream_dedup_exact"] >= 2
-        assert out.count() == n
-        assert out.select("event_id").distinct().count() == n
-    finally:
-        out.unpersist()
-
-
 def test_av_sync_one_row_per_frame_and_nonnegative_lag(spark):
     sync = QUERIES["q_multimodal_av_sync"](spark, SF_DIR).cache()
     try:
@@ -205,27 +114,6 @@ def test_range_search_radius_and_selectivity(spark):
         res.unpersist()
 
 
-def test_stream_join_interval_crosses_batches_and_bounds(spark):
-    """The stream-stream join must span several micro-batches (state
-    genuinely buffered on both sides) and every emitted pair must sit
-    inside the 1-hour interval (0 <= mins_before <= 60)."""
-    from kafka_hadoop_consumer_spark.queries import continuous
-
-    out = QUERIES["q_stream_join_interval"](spark, SF_DIR).cache()
-    try:
-        assert continuous.LAST_BATCHES["q_stream_join_interval"] >= 2
-        n = out.count()
-        assert n > 0
-        bad = out.where(
-            (F.col("mins_before") < 0) | (F.col("mins_before") > 60)
-        )
-        assert bad.count() == 0
-        # no duplicate emissions: (purchase, click) pairs are unique
-        assert out.select("purchase_id", "click_id").distinct().count() == n
-    finally:
-        out.unpersist()
-
-
 def test_graph_cc_components_are_edge_consistent(spark):
     """Independent CC invariants (stronger than the oracle hash alone):
     both endpoints of every edge share a component, the component id is
@@ -321,29 +209,3 @@ def test_graph_cc_converges_in_log_rounds(spark):
     assert rounds is not None and rounds < graph.CC_MAX_ROUNDS, rounds
     # the fixture co-purchase graph is dense: fixpoint within a few rounds
     assert rounds <= 6, rounds
-
-
-def test_late_r6_streaming_keys_span_multiple_microbatches(spark):
-    """q_stream_static_join / q_stream_sliding_agg / q_stream_late_drop
-    must actually run >= 2 data micro-batches (one big batch would make
-    the cross-batch-state claim vacuous); for late_drop, the late path
-    must genuinely fire: the emitted table misses rows the full batch
-    recompute over the same landing would count."""
-    from kafka_hadoop_consumer_spark.queries import continuous
-
-    for key in ("q_stream_static_join", "q_stream_sliding_agg"):
-        QUERIES[key](spark, SF_DIR).count()
-        assert continuous.LAST_BATCHES[key] >= 2, key
-
-    out = QUERIES["q_stream_late_drop"](spark, SF_DIR).cache()
-    try:
-        assert continuous.LAST_BATCHES["q_stream_late_drop"] >= 2
-        landing = continuous.LAST_LANDING["q_stream_late_drop"]
-        landed = spark.read.parquet(landing)
-        emitted = out.agg(F.sum("n_events")).collect()[0][0]
-        assert emitted < landed.count(), (
-            "no rows were late-dropped or window-elided; the key is not "
-            "exercising the watermark contract"
-        )
-    finally:
-        out.unpersist()

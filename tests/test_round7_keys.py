@@ -1,60 +1,12 @@
-"""Round-7 additions: the stateful-counter probe key and the
-landing-dir reaper."""
+"""Round-7 additions: tracked-cache ownership, distributed_prefix,
+plan-audit parsing, operator config guards and quality metrics."""
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import functions as F
 
 from kafka_hadoop_consumer_spark.queries import QUERIES
 from tests.conftest import SF_DIR
-
-
-def test_stateful_counters_probe_downgrades_here(spark):
-    """In this container transformWithStateInPandas is unavailable
-    (runner needs google.protobuf), so the key MUST take the
-    applyInPandasWithState path — and still carry state across >= 2
-    data micro-batches, or the cross-batch-state claim is vacuous."""
-    from kafka_hadoop_consumer_spark.queries import continuous
-    from kafka_hadoop_consumer_spark.streaming.ops import (
-        transform_with_state_available,
-    )
-
-    assert transform_with_state_available() is False
-    out = QUERIES["q_stream_stateful_counters"](spark, SF_DIR)
-    got = {r.user_id: (r.n_events, r.sum_cents) for r in out.collect()}
-    assert continuous.LAST_BATCHES["q_stream_stateful_counters"] >= 2
-
-    from kafka_hadoop_consumer_spark.catalog import load_table
-
-    exact = {
-        r.user_id: (r.n, r.cents)
-        for r in load_table(spark, SF_DIR, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.floor(F.col("value") * 100 + 0.5)).cast("long").alias("cents"),
-        )
-        .collect()
-    }
-    assert got == exact
-
-
-def test_landing_reaper_keeps_one_dir_per_key(spark):
-    """Re-running a streaming key must reap its previous landing dir
-    (r6 advice: repeated driver/pytest runs were accumulating full
-    events-table copies under /tmp)."""
-    from kafka_hadoop_consumer_spark.queries import continuous
-
-    QUERIES["q_stream_continuous_agg"](spark, SF_DIR).count()
-    first = continuous.LAST_LANDING["q_stream_continuous_agg"]
-    assert os.path.isdir(first)
-    QUERIES["q_stream_continuous_agg"](spark, SF_DIR).count()
-    second = continuous.LAST_LANDING["q_stream_continuous_agg"]
-    assert second != first
-    assert os.path.isdir(second)
-    assert not os.path.exists(first)
 
 
 def test_delegating_query_keeps_cache_owner(spark):

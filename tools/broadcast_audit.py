@@ -65,8 +65,6 @@ def _add(path: str, func: str, arg: str, cls: str) -> None:
     LEDGER[(path, func, arg)] = cls
 
 
-# --- streaming -----------------------------------------------------------
-_add("streaming/ops.py", "enrich_with_dim", "dim", "dim")
 # --- aggregates ----------------------------------------------------------
 for f, a, c in [
     ("q_agg_rollup", "n", "dim"), ("q_agg_rollup", "r", "dim"),
