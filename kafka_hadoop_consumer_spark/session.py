@@ -5,13 +5,21 @@ fixtures are timestamp_ntz, SURVEY.md §7 R3) and for scale (AQE on, so the
 same declarative plans re-optimize at runtime on a real cluster; shuffle
 partition count is a knob, defaulting low for local scale factors but meant
 to be raised to ~2-3× total cores at 100 TB).
+
+Sessions this module builds also install the worker start-up hook
+(``_pyworker/sitecustomize.py``): every Python process Spark launches
+imports the driver's bytecode-cached pyspark instead of compiling
+``$SPARK_HOME/python/lib/pyspark.zip`` from source.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyspark
 from pyspark.sql import SparkSession
+
+from kafka_hadoop_consumer_spark._pyworker.sitecustomize import DRIVER_DIR_ENV
 
 # Tuned for the local[32] test host; on a 1000-executor cluster raise
 # shuffle partitions to O(cores*2) and let AQE coalesce down.
@@ -22,6 +30,10 @@ DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
 # shuffle that any real executor absorbs OOMs at 1g. Only effective when
 # this process launches the JVM (no-op on an externally built session).
 DEFAULT_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+# The worker start-up hook and the directory it lets workers import
+# pyspark from (see _pyworker/sitecustomize.py).
+_PYWORKER_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_pyworker")
+_DRIVER_PYSPARK_DIR = os.path.dirname(os.path.dirname(os.path.abspath(pyspark.__file__)))
 
 
 def ensure_session_defaults(spark: SparkSession) -> None:
@@ -75,6 +87,8 @@ def get_spark(app_name: str = "kafka_hadoop_consumer_spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", _PYWORKER_DIR)
+        .config(f"spark.executorEnv.{DRIVER_DIR_ENV}", _DRIVER_PYSPARK_DIR)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -4,7 +4,9 @@
 
 One bounded run per invocation (availableNow), resuming from the
 checkpoint — exactly the reference's cron pattern, with the ZK offset
-commit upgraded to the checkpoint WAL (exactly-once).
+commit upgraded to the checkpoint WAL (exactly-once). Prints the run's
+metrics (rows, micro-batches, summed per-phase ``duration_ms``) as one
+JSON line.
 
     python -m kafka_hadoop_consumer_spark.streaming.cli \
         --kind file --format json --path /data/incoming \
@@ -20,6 +22,7 @@ commit upgraded to the checkpoint WAL (exactly-once).
 from __future__ import annotations
 
 import argparse
+import json
 
 from kafka_hadoop_consumer_spark.streaming.ingest import SourceSpec, run_ingest
 
@@ -142,7 +145,7 @@ def main(argv: list[str] | None = None) -> None:
     from kafka_hadoop_consumer_spark import get_spark
 
     spark = get_spark(app_name="ingest-cli")
-    run_ingest(
+    res = run_ingest(
         spark,
         spec_from_args(args),
         out_path=args.out,
@@ -153,6 +156,7 @@ def main(argv: list[str] | None = None) -> None:
         max_runtime_sec=args.max_runtime_sec,
         sink_format=args.sink_format,
     )
+    print(json.dumps(res, sort_keys=True))
 
 
 if __name__ == "__main__":

@@ -226,7 +226,10 @@ def run_ingest(
 
     Returns run metrics from the streaming progress API — the
     operational telemetry the reference's job counters provided:
-    ``{"rows": input rows this run, "batches": micro-batches run}``.
+    ``{"rows": input rows this run, "batches": micro-batches run,
+    "duration_ms": {phase: ms summed over the run's micro-batches}}``,
+    the phases being the progress entries' ``durationMs`` keys
+    (``addBatch``, ``queryPlanning``, ``walCommit``, ...).
     """
     if sink_format not in ("parquet", "text"):
         raise ValueError(f"unsupported sink_format: {sink_format!r}")
@@ -284,7 +287,12 @@ def run_ingest(
             spark.conf.unset(_PROGRESS_CAP_KEY)
         else:
             spark.conf.set(_PROGRESS_CAP_KEY, prev_cap)
+    duration_ms: dict[str, int] = {}
+    for p in progresses:
+        for phase, ms in p["durationMs"].items():
+            duration_ms[phase] = duration_ms.get(phase, 0) + int(ms)
     return {
         "rows": int(sum(p["numInputRows"] for p in progresses)),
         "batches": len(progresses),
+        "duration_ms": duration_ms,
     }

@@ -88,10 +88,12 @@ def test_ingest_cli_end_to_end(spark, tmp_path):
     assert spark.read.parquet(out).count() == 100
 
 
-def test_ingest_cli_kafka_sim_end_to_end(spark, tmp_path):
+def test_ingest_cli_kafka_sim_end_to_end(spark, tmp_path, capsys):
     """The offline Kafka stand-in is reachable from the A8 CLI: a bounded
     kafka_sim run drains the simulated topic through the full decode →
-    checkpointed-sink pipeline."""
+    checkpointed-sink pipeline, and prints the run's metrics."""
+    import json
+
     from kafka_hadoop_consumer_spark.streaming.cli import main
 
     out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
@@ -100,6 +102,8 @@ def test_ingest_cli_kafka_sim_end_to_end(spark, tmp_path):
         "--n-partitions", "2", "--n-messages", "50",
         "--out", out, "--checkpoint", ck,
     ])
+    printed = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert printed["rows"] == 100 and "addBatch" in printed["duration_ms"]
     got = spark.read.parquet(out)
     assert got.count() == 100
     assert {"payload", "topic", "partition", "offset"} <= set(got.columns)

@@ -414,12 +414,17 @@ def test_kafka_sim_stream_windowed_agg(spark, tmp_path):
 
 
 def test_run_ingest_returns_metrics(spark, tmp_path):
-    """run_ingest surfaces per-run telemetry (rows, batches) from the
-    streaming progress API — the reference's job-counter parity."""
+    """run_ingest surfaces per-run telemetry (rows, batches, summed
+    per-phase durations) from the streaming progress API — the
+    reference's job-counter parity."""
     spec = SourceSpec(kind="kafka_sim", topic="m",
                       extra_options={"n_partitions": "2", "n_messages": "50"})
     m = run_ingest(spark, spec, str(tmp_path / "o"), str(tmp_path / "c"))
     assert m["rows"] == 100 and m["batches"] >= 1
+    ms = m["duration_ms"]
+    assert {"addBatch", "queryPlanning", "walCommit", "triggerExecution"} <= set(ms)
+    # a trigger's wall time spans its phases
+    assert ms["triggerExecution"] >= ms["addBatch"] >= 0
     # idle rerun: zero new rows
     m2 = run_ingest(spark, spec, str(tmp_path / "o"), str(tmp_path / "c"))
     assert m2["rows"] == 0

@@ -16,8 +16,9 @@ not a claim.
 
 ``skew_join`` is the one section without size points: an 8M-row fact
 with one hot key (half the rows) joined to a small dim and aggregated
-four ways, each reporting its straggler (the longest task, read off the
-Spark REST status API), the number that grows with cluster size.
+four ways, each reporting its straggler (the longest task of the join's
+reduce stage, read off the Spark REST status API) and that stage's id;
+the straggler is the number that grows with cluster size.
 
 Run: python tools/scale_probe.py <section>   # e.g. minhash_10x, cc_100x, skew_join
 """
@@ -615,8 +616,10 @@ def bootstrap(spark, n: int) -> dict:
 # Wall-clock on a many-core box understates the claim: the other cores
 # absorb the non-hot work while the hot task runs, so total time barely
 # moves. The number that scales to a 1000-executor cluster is the
-# STRAGGLER — the longest single task over the stages a run completes: a
-# job is as slow as its slowest task, and salting's point is to cut it.
+# STRAGGLER — the longest single task of the join's reduce side, the
+# completed stage with the largest shuffle read: a job is as slow as its
+# slowest task, and salting's point is to cut it. Map-side tasks are not
+# counted; each scans an even slice of the range whatever the skew.
 SKEW_ROWS = 8_000_000
 SKEW_HOT_FRACTION = 0.5
 SKEW_N_KEYS = 1_000
@@ -626,8 +629,9 @@ _NO_BROADCAST = {"spark.sql.autoBroadcastJoinThreshold": "-1",
                  "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1"}
 
 
-def _completed_stage_ids(base: str) -> set[int] | None:
-    """None on any REST failure — that run then records no straggler."""
+def _completed_stage_reads(base: str) -> dict[int, int] | None:
+    """Shuffle-read bytes by completed stage id. None on any REST
+    failure — that run then records no straggler."""
     import urllib.error
     import urllib.request
 
@@ -635,28 +639,23 @@ def _completed_stage_ids(base: str) -> set[int] | None:
         with urllib.request.urlopen(
             f"{base}/stages?status=complete", timeout=10
         ) as r:
-            return {s["stageId"] for s in json.load(r)}
+            return {s["stageId"]: s["shuffleReadBytes"] for s in json.load(r)}
     except (urllib.error.URLError, urllib.error.HTTPError, OSError, ValueError):
         return None
 
 
-def _max_task_ms(base: str, stage_ids: set[int]) -> float | None:
-    """Longest task duration (ms) across the given completed stages."""
+def _max_task_ms(base: str, stage_id: int) -> float | None:
+    """Longest task duration (ms) of one completed stage."""
     import urllib.error
     import urllib.request
 
-    mx = None
-    for sid in stage_ids:
-        url = f"{base}/stages/{sid}/0/taskSummary?quantiles=1.0"
-        try:
-            with urllib.request.urlopen(url, timeout=10) as r:
-                summary = json.load(r)
-        except (urllib.error.URLError, urllib.error.HTTPError, OSError):
-            continue  # stage with no task data (skipped/reused)
-        dur = summary.get("duration") or []
-        if dur:
-            mx = max(mx or 0.0, float(dur[0]))
-    return mx
+    url = f"{base}/stages/{stage_id}/0/taskSummary?quantiles=1.0"
+    try:
+        with urllib.request.urlopen(url, timeout=10) as r:
+            dur = json.load(r).get("duration") or []
+    except (urllib.error.URLError, urllib.error.HTTPError, OSError, ValueError):
+        return None
+    return float(dur[0]) if dur else None
 
 
 def skew_join(spark) -> dict:
@@ -711,20 +710,25 @@ def skew_join(spark) -> dict:
     sc = spark.sparkContext
     rest = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
 
-    def run(conf: dict, build) -> tuple[float, float | None]:
-        """(wall sec, straggler ms) of one run under ``conf``."""
+    def run(conf: dict, build) -> tuple[float, int | None, float | None]:
+        """(wall sec, reduce stage id, its straggler ms) of one run under
+        ``conf``."""
         saved = {k: spark.conf.get(k, None) for k in {**_NO_BROADCAST, **conf}}
         try:
             for k, v in {**_NO_BROADCAST, **conf}.items():
                 spark.conf.set(k, v)
-            before = _completed_stage_ids(rest)
+            before = _completed_stage_reads(rest)
             t0 = time.perf_counter()
             build().write.format("noop").mode("overwrite").save()
             wall = round(time.perf_counter() - t0, 3)
-            after = _completed_stage_ids(rest)
+            after = _completed_stage_reads(rest)
             if before is None or after is None:
-                return wall, None
-            return wall, _max_task_ms(rest, after - before)
+                return wall, None, None
+            reads = {sid: b for sid, b in after.items() if sid not in before}
+            if not reads:
+                return wall, None, None
+            reduce_side = max(reads, key=reads.get)
+            return wall, reduce_side, _max_task_ms(rest, reduce_side)
         finally:
             for k, v in saved.items():
                 if v is None:
@@ -736,7 +740,8 @@ def skew_join(spark) -> dict:
     out = {"rows": SKEW_ROWS, "hot_fraction": SKEW_HOT_FRACTION,
            "aqe_tuned_threshold": "4m+force"}
     for name, (conf, build) in variants.items():
-        out[f"{name}_sec"], out[f"{name}_max_task_ms"] = run(conf, build)
+        (out[f"{name}_sec"], out[f"{name}_reduce_stage"],
+         out[f"{name}_max_task_ms"]) = run(conf, build)
     return out
 
 
