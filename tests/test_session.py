@@ -36,8 +36,7 @@ def test_hook_keeps_py4j_zip_when_driver_dir_lacks_py4j(tmp_path):
     assert zips_to_drop([*SPARK_ZIPS, d], d) == SPARK_ZIPS[:1]
 
 
-def _assert_driver_pyspark(found):
-    pyspark_file, omp = found
+def _assert_driver_pyspark(pyspark_file, omp):
     assert ".zip" not in pyspark_file, pyspark_file
     assert omp is not None and int(omp) >= 1
 
@@ -58,7 +57,7 @@ def test_task_worker_imports_driver_pyspark(spark):
     rows = spark.range(1, numPartitions=1).mapInPandas(
         probe, "f string, omp string").collect()
     assert len(rows) == 1
-    _assert_driver_pyspark((rows[0].f, rows[0].omp))
+    _assert_driver_pyspark(rows[0].f, rows[0].omp)
 
 
 def test_planner_process_imports_driver_pyspark(spark):
@@ -93,5 +92,5 @@ def test_planner_process_imports_driver_pyspark(spark):
     spark.dataSource.register(Probe)
     rows = spark.read.format("khcs_pyspark_probe").load().collect()
     assert len(rows) == 1
-    _assert_driver_pyspark((rows[0].f, rows[0].omp))
+    _assert_driver_pyspark(rows[0].f, rows[0].omp)
     assert rows[0].omp == "1"
